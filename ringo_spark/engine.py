@@ -14,11 +14,15 @@ Execution model (Spark-first):
 
 - Dimensions first (topo order), then facts; a fact re-reads its persisted
   dimensions so surrogate keys are consistent across facts sharing a dim.
-- Full refresh writes to a staging directory then atomically renames over
-  the live one (the reference's ``{{suff}}`` staging-table swap,
-  Generator/Internal.hs:38-41).
-- Incremental refresh appends the watermark window; the watermark store is
-  a JSON file next to the tables.  Dimension increments anti-join the
+- Every write lands in an immutable ``<table>__vN`` directory and becomes
+  visible when the table's manifest (``<table>.manifest.json``) is
+  replaced atomically — the reference's ``{{suff}}`` staging-table swap
+  (Generator/Internal.hs:38-41), in a form that is also safe on object
+  stores.  One manifest publish commits the data, the table's resume
+  watermark and its micro-batch tags together; nothing else holds
+  warehouse state.
+- Incremental refresh appends the window since the stored watermark as a
+  new directory of the snapshot.  Dimension increments anti-join the
   existing table and offset surrogate ids.
 - Fact tables are written partitioned by a derived day column
   (``<time>_day``) when ``partition_facts`` — the Spark analogue of the
@@ -34,6 +38,7 @@ import logging
 import os
 import shutil
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,28 +61,34 @@ class ManifestConflict(RuntimeError):
     read and its publish; the caller re-reads and retries."""
 
 
+class LegacyWarehouseError(ValueError):
+    """The storage path holds warehouse-wide state files of the retired
+    rename commit protocol: its tables are plain directories with no
+    manifest, so this engine can neither read them nor resume them."""
+
+
+# state files the rename protocol kept next to its tables
+_LEGACY_STATE_FILES = ("_watermarks.json", "_rename_windows.json",
+                       "_batch_tags.json")
+
+
 class Engine:
     def __init__(self, spark: SparkSession, env: Env, storage_path: str,
                  partition_facts: bool = False,
                  count_distinct_mode: str = "sketch",
-                 commit_mode: str = "rename",
                  keep_versions: int = 1,
                  salt_tenant_buckets: int = 0):
-        # commit_mode picks the full-refresh publication protocol:
-        #   "rename"   — staging dir renamed over live (atomic on one
-        #                POSIX filesystem; the reference's {{suff}} swap,
-        #                Generator/Internal.hs:38-41).
-        #   "manifest" — each refresh writes an immutable versioned dir
-        #                and atomically flips a small manifest pointer.
-        #                On S3/GCS rename is copy+delete (not atomic), but
-        #                a single small-object PUT is — so the manifest is
-        #                the object-store-safe equivalent of the swap.
-        if commit_mode not in ("rename", "manifest"):
-            raise ValueError(f"unknown commit_mode: {commit_mode!r}")
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
-        self.commit_mode = commit_mode
-        # manifest mode only: how many published versions stay readable.
+        legacy = [f for f in _LEGACY_STATE_FILES
+                  if os.path.exists(os.path.join(storage_path, f))]
+        if legacy:
+            raise LegacyWarehouseError(
+                f"{storage_path} holds {', '.join(legacy)}: it was written "
+                "by the retired rename commit protocol, whose tables have "
+                "no manifest and whose watermarks this engine cannot "
+                "resume from.  Run a full refresh into a new storage path")
+        # how many published versions stay readable.
         # keep_versions > 1 enables time-travel (`read_table(version=N)`) —
         # pin a training run to a snapshot while refreshes continue.
         self.keep_versions = keep_versions
@@ -95,6 +106,10 @@ class Engine:
         # (populate/fact.py docstring; shape in functions/skew.py)
         self.salt_tenant_buckets = salt_tenant_buckets
         self.sources: dict[str, DataFrame] = {}
+        # dimension-population memo: spans the facts of one run() batch
+        # (see run_fact)
+        self._batch_dim_memo = False
+        self._populated_this_run: set[str] = set()
         os.makedirs(storage_path, exist_ok=True)
 
     # --- sources -----------------------------------------------------------
@@ -209,19 +224,6 @@ class Engine:
             path_root=os.path.join(self.storage, "_bucketed"))
         return sorted({n for p in pairs for n in (p[0], p[2])})
 
-    # --- storage -----------------------------------------------------------
-
-    def _path(self, table: str, staging: bool = False) -> str:
-        return os.path.join(self.storage, table + ("__staging" if staging else ""))
-
-    def _recover_swap(self, table: str) -> None:
-        """Heal a swap that crashed between rename-aside and rename-in:
-        the previous table sits at ``<table>__old`` with no live dir."""
-        live = self._path(table)
-        old = live + "__old"
-        if not os.path.exists(live) and os.path.exists(old):
-            os.rename(old, live)
-
     # --- manifest-pointer commits (object-store-safe) ----------------------
 
     def _manifest_path(self, table: str) -> str:
@@ -258,10 +260,12 @@ class Engine:
     def _lock_path(self, table: str) -> str:
         return self._manifest_path(table) + ".lock"
 
-    def _acquire_manifest_lock(self, table: str) -> tuple[int, str]:
-        """Exclusive flock on the table's persistent lock file.  Returns
-        ``(fd, token)``; the token is vestigial (release is a close, no
-        ownership check needed) but kept so call sites are stable."""
+    def _acquire_manifest_lock(self, table: str) -> int:
+        """Exclusive flock on the table's persistent lock file; returns
+        the locked fd.  Release is ``os.close(fd)``: the kernel drops
+        the lock with the fd (and with the process, which is what makes
+        crashed-writer staleness logic unnecessary).  The lock file
+        stays on disk."""
         import errno
         import fcntl
 
@@ -296,7 +300,7 @@ class Engine:
                 # this spin forever).
                 try:
                     if os.stat(lock).st_ino == os.fstat(fd).st_ino:
-                        return fd, ""
+                        return fd
                 except FileNotFoundError:
                     pass
                 if time.monotonic() > deadline:
@@ -312,13 +316,6 @@ class Engine:
             # contention branch — an external process replacing the lock
             # file in a loop must not make this spin at full speed
 
-    def _release_manifest_lock(self, table: str, fd: int,
-                               token: str) -> None:
-        """flock release == close; the kernel drops the lock with the
-        fd (and with the process, which is what makes crashed-writer
-        staleness logic unnecessary).  The lock file stays on disk."""
-        os.close(fd)
-
     def _read_manifest(self, table: str) -> dict | None:
         mp = self._manifest_path(table)
         if not os.path.exists(mp):
@@ -333,7 +330,8 @@ class Engine:
                           schemas: dict[str, str] | None = None,
                           windows: dict[str, list] | None = None,
                           absorbed: list | None = None,
-                          batch_tags: list | None = None) -> None:
+                          batch_tags: list | None = None,
+                          watermark: str | None = None) -> None:
         """Atomic pointer flip: tmp file + ``os.replace`` locally — the
         analogue of a single small-object PUT on S3/GCS (which IS atomic,
         unlike directory rename there).  The manifest maps each retained
@@ -341,7 +339,9 @@ class Engine:
         dirs, Iceberg-style), so both full refreshes AND incremental
         appends become visible atomically: readers resolve the manifest
         first and see a complete previous snapshot or a complete new one,
-        never a partial table.
+        never a partial table.  The same flip publishes the table's
+        resume ``watermark`` and its micro-batch ``batch_tags``, so no
+        crash can leave data visible without them.
 
         ``expected_version`` arms the compare-and-swap: under the table's
         exclusive lock the manifest is re-read, and if its version moved
@@ -361,7 +361,7 @@ class Engine:
         is unpublished) from a writer that crashed between rename and
         pointer flip — it is removed."""
         tomb = None
-        fd, lock_token = self._acquire_manifest_lock(table)
+        fd = self._acquire_manifest_lock(table)
         try:
             if expected_version is not None:
                 m = self._read_manifest(table)
@@ -416,11 +416,16 @@ class Engine:
                 # Compaction carries the list forward; a true full
                 # refresh publishes batch_tags=None, clearing it.
                 record["batch_tags"] = batch_tags
+            if watermark is not None:
+                # the exclusive upper bound of the refresh this snapshot
+                # completes — the next incremental run's lower bound (see
+                # run_fact).  Published with the data it describes.
+                record["watermark"] = watermark
             with open(tmp, "w") as fh:
                 json.dump(record, fh)
             os.replace(tmp, self._manifest_path(table))
         finally:
-            self._release_manifest_lock(table, fd, lock_token)
+            os.close(fd)
         if tomb is not None:
             shutil.rmtree(tomb, ignore_errors=True)
 
@@ -506,6 +511,16 @@ class Engine:
             windows[new_dir] = [self._iso(window[0]), self._iso(window[1])]
         return windows
 
+    @staticmethod
+    def _next_watermark(m: dict | None, upper) -> str | None:
+        """Resume watermark for a new publish: the write's exclusive upper
+        bound as ISO text, or — for an unbounded write (``upper`` None:
+        streaming micro-batches, compaction, an unbounded refresh) — the
+        previous snapshot's, carried forward."""
+        if upper is None:
+            return m.get("watermark") if m else None
+        return upper.isoformat() if hasattr(upper, "isoformat") else str(upper)
+
     def _next_schemas(self, m: dict | None, version: int,
                       schema_json: str) -> dict[str, str]:
         """Per-retained-version schema map for a new publish — pruned on
@@ -561,11 +576,11 @@ class Engine:
     _STAGE_ORPHAN_AGE_SECS = 3600.0   # crashed-writer stage dirs
 
     def _write_stage(self, df: DataFrame, table: str, partition_by=()) -> str:
-        """Write the manifest-mode data payload into a writer-unique
-        stage dir (pid + random token) — promoted to its ``__vN`` name
-        under the publish lock.  Version-named dirs must never be write
-        targets: two writers computing the same next version would
-        overwrite each other's files before either publish."""
+        """Write the data payload into a writer-unique stage dir (pid +
+        random token) — promoted to its ``__vN`` name under the publish
+        lock.  Version-named dirs must never be write targets: two
+        writers computing the same next version would overwrite each
+        other's files before either publish."""
         stage = f"{table}__stage_{os.getpid()}_{os.urandom(4).hex()}"
         w = df.write.mode("overwrite")
         if partition_by:
@@ -657,75 +672,67 @@ class Engine:
                 f"(live={m['version']}, keep_versions={self.keep_versions})")
         return [os.path.join(self.storage, d) for d in dirs]
 
-    def _live_dir(self, table: str) -> str:
-        """Current readable directory — rename mode only (manifest
-        snapshots are dir *lists*; use :meth:`_snapshot_paths`)."""
-        self._recover_swap(table)
-        return self._path(table)
-
     def table_exists(self, table: str) -> bool:
-        if self.commit_mode == "manifest":
-            return self._read_manifest(table) is not None
-        self._recover_swap(table)
-        return os.path.exists(self._path(table))
+        return self._read_manifest(table) is not None
 
     def read_table(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the live table, or (manifest mode, ``keep_versions`` > 1)
-        time-travel to a still-retained published snapshot — e.g. pin a
-        training run to version N while refreshes and appends move the
-        pointer forward."""
-        if self.commit_mode == "manifest":
-            # ONE manifest read resolves both the dir list and the
-            # snapshot schema — a second read could land after a
-            # concurrent publish and pair version V's dirs with
-            # version V+1's schema (or a dropped table's None).
-            m = self._read_manifest(table)
-            paths = self._snapshot_paths(table, version, m=m)
-            # schema-on-manifest: the publish recorded the snapshot's
-            # authoritative schema, so mixed-schema snapshots (an append
-            # that ADDED columns) read correctly — older files null-fill
-            # the missing columns under the explicit reader schema.
-            # This is the scale-safe alternative to mergeSchema, which
-            # reads EVERY file footer (a non-starter on a 100 TB table);
-            # pre-schema manifests fall back to footer inference.
-            v = m["version"] if version is None else version
-            schema_json = (m.get("schemas") or {}).get(str(v))
-            if schema_json is not None:
-                from pyspark.sql import types as T
+        """Read the live table, or (``keep_versions`` > 1) time-travel to
+        a still-retained published snapshot — e.g. pin a training run to
+        version N while refreshes and appends move the pointer forward."""
+        # ONE manifest read resolves both the dir list and the snapshot
+        # schema — a second read could land after a concurrent publish
+        # and pair version V's dirs with version V+1's schema (or a
+        # dropped table's None).
+        m = self._read_manifest(table)
+        paths = self._snapshot_paths(table, version, m=m)
+        # schema-on-manifest: the publish recorded the snapshot's
+        # authoritative schema, so mixed-schema snapshots (an append
+        # that ADDED columns) read correctly — older files null-fill
+        # the missing columns under the explicit reader schema.
+        # This is the scale-safe alternative to mergeSchema, which
+        # reads EVERY file footer (a non-starter on a 100 TB table);
+        # pre-schema manifests fall back to footer inference.
+        v = m["version"] if version is None else version
+        schema_json = (m.get("schemas") or {}).get(str(v))
+        if schema_json is not None:
+            from pyspark.sql import types as T
 
-                return (self.spark.read
-                        .schema(T.StructType.fromJson(json.loads(schema_json)))
-                        .parquet(*paths))
-            return self.spark.read.parquet(*paths)
-        if version is not None:
-            raise ValueError("time-travel reads need commit_mode='manifest'")
-        return self.spark.read.parquet(self._live_dir(table))
+            return (self.spark.read
+                    .schema(T.StructType.fromJson(json.loads(schema_json)))
+                    .parquet(*paths))
+        return self.spark.read.parquet(*paths)
 
     def table_versions(self, table: str) -> list[int]:
         """Retained (readable) versions, oldest first; [] when absent."""
-        if self.commit_mode != "manifest":
-            return [1] if self.table_exists(table) else []
         m = self._read_manifest(table)
         if m is None:
             return []
         return sorted(int(v) for v in self._manifest_versions(m))
 
+    @contextmanager
+    def _staged(self, df: DataFrame, table: str, partition_by=()):
+        """Stage ``df`` for a publish and reclaim the stage dir on exit.
+        A successful publish renamed it to its version name, so the
+        reclaim is a no-op there; a refused, skipped or lost publish
+        would otherwise leak a full copy of the payload on disk until
+        some later publish's _gc_versions aged it out."""
+        stage = self._write_stage(df, table, partition_by)
+        try:
+            yield stage
+        finally:
+            shutil.rmtree(os.path.join(self.storage, stage),
+                          ignore_errors=True)
+
     def _write_full(self, df: DataFrame, table: str, partition_by=(),
                     absorbed: list | None = None,
                     preserve_windows: bool = False,
                     expected_input_version: int | None = None,
-                    batch_tag: str | None = None) -> None:
-        """Crash-safe full-refresh publication, per ``commit_mode``.
-
-        rename: the previous live directory is renamed *aside* before
-        staging is renamed in, so a crash at any point leaves either the
-        old table or the new one readable — never neither.  The aside copy
-        is deleted last (and reclaimed on the next swap if the delete
-        itself crashed).
-
-        manifest: the refresh lands in an immutable ``<table>__vN`` dir;
-        the manifest pointer flips only after the write completes, then
-        stale versions are garbage-collected.
+                    batch_tag: str | None = None, upper=None) -> None:
+        """Crash-safe full-refresh publication: the refresh lands in an
+        immutable ``<table>__vN`` dir; the manifest pointer flips only
+        after the write completes, then stale versions are
+        garbage-collected.  ``upper`` is the refresh's exclusive upper
+        bound, published as the table's resume watermark.
 
         ``expected_input_version`` (compaction only, ADVICE r16): a full
         refresh whose payload was DERIVED from a specific published
@@ -735,371 +742,197 @@ class Engine:
         the compacted snapshot.  The CAS loop's own retry-on-conflict is
         WRONG for such writers, so a version advance aborts with
         ManifestConflict and the caller reruns over the new snapshot."""
-        if self.commit_mode == "manifest":
-            stage = self._write_stage(df, table, partition_by)
-            try:
-                self._full_manifest_cas(df, table, stage, absorbed,
-                                        expected_input_version,
-                                        preserve_windows, batch_tag)
-            except BaseException:
-                # same stage-leak rule as _write_append: any raise after
-                # the payload staged (version-advance abort, CAS
-                # exhaustion) must reclaim the staged copy (ADVICE r16)
-                shutil.rmtree(os.path.join(self.storage, stage),
-                              ignore_errors=True)
-                raise
-            return
-        staging, live = self._path(table, True), self._path(table)
-        old = live + "__old"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
-        if batch_tag is not None:
-            # inflight bracket around the tagged first-batch full write
-            # (ADVICE r18): the tag sidecar lands only AFTER the live
-            # rename below, so a crash in between left committed data
-            # with no recorded tag and no marker — a foreachBatch replay
-            # then took the append path untagged and double-counted.
-            # With the marker, the replay's _inflight_retry_is_safe
-            # refuses loudly (tag absent + opaque rename marker), and a
-            # replay after a crash that DID reach the stamp no-op-skips
-            # on the tag and heals the marker, exactly like the
-            # bracketed append path.
-            self._mark_inflight(table)
-        self._recover_swap(table)     # heal a swap crashed before rename-in
-        if os.path.exists(old):       # leftover from a crash mid-delete
-            shutil.rmtree(old)
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(staging, live)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if not preserve_windows:
-            # a full refresh recomputes every window, so previously
-            # stamped appends no longer exist to double-count against.
-            # Compaction passes preserve_windows=True: it MERGES the
-            # stamped rows (they still exist), so the ledger must keep
-            # refusing their reruns (r16 review).  Batch tags follow the
-            # same rule (compaction merges the tagged rows; a true full
-            # refresh replaces them).
-            self._clear_rename_windows(table)
-            self._clear_batch_tags(table)
-        if batch_tag is not None:
-            # a streaming pipeline's FIRST micro-batch lands as a full
-            # write (table doesn't exist yet) — its tag must still be
-            # recorded or a later replay of that batch, arriving once the
-            # table exists, would take the append path untagged and
-            # double-count (r18)
-            self._stamp_batch_tag(table, batch_tag)
-            self._mark_inflight(table, clear=True)
-
-    def _full_manifest_cas(self, df: DataFrame, table: str, stage: str,
-                           absorbed: list | None,
-                           expected_input_version: int | None,
-                           preserve_windows: bool = False,
-                           batch_tag: str | None = None) -> None:
-        """The manifest-mode full-refresh publish: bounded CAS retry
-        promoting the already-staged payload (stage cleanup on raise is
-        the caller's job — see :meth:`_write_full`)."""
-        for _ in range(16):    # bounded CAS retry; no data rewrite
-            m = self._read_manifest(table)
-            if expected_input_version is not None and \
-                    (m is None or m["version"] != expected_input_version):
-                # derived-payload writer (compaction): someone committed
-                # (or dropped/recreated the table) since the input
-                # snapshot was read — retrying the CAS would publish a
-                # snapshot missing their rows and their window stamp
-                # (ADVICE r16 TOCTOU; the vanished-manifest arm is
-                # ADVICE r17: without it a derived payload silently
-                # published as v1 over the recreated table).  Abort;
-                # the caller reruns over the current snapshot.
-                now = f"v{m['version']}" if m is not None else \
-                    "a dropped/recreated manifest"
-                raise ManifestConflict(
-                    f"{table}: manifest advanced to {now} "
-                    f"after the compaction read its input at "
-                    f"v{expected_input_version} — publishing would drop "
-                    "the concurrent commit's rows; rerun the compaction")
-            version = (m["version"] if m else 0) + 1
-            dirname = f"{table}__v{version}"
-            versions = self._next_versions(m, version, [dirname])
-            schemas = self._next_schemas(m, version, df.schema.json())
-            # a full refresh carries no window stamp (it covers
-            # everything); prior stamps prune to dirs some retained
-            # snapshot still references.  ``absorbed`` (compaction
-            # only) carries the merged-away window stamps forward as
-            # refuse-keys; a true full refresh passes None, clearing
-            # them.
-            wins = self._next_windows(m, versions)
-            # batch tags follow the window rule: compaction
-            # (preserve_windows=True) merges the tagged rows, so their
-            # replay protection carries forward; a true full refresh
-            # replaces them and clears the list — unless this full write
-            # IS a tagged micro-batch (a streaming pipeline's first
-            # batch landing on a nonexistent table), which seeds it.
-            tags = (list(m.get("batch_tags", []))
-                    if preserve_windows and m is not None else [])
-            if batch_tag is not None and batch_tag not in tags:
-                tags.append(batch_tag)
-            tags = self._bound_tags(tags)
-            try:
-                self._publish_manifest(table, version, versions,
-                                       expected_version=version - 1,
-                                       promote=(stage, dirname),
-                                       schemas=schemas, windows=wins,
-                                       absorbed=absorbed,
-                                       batch_tags=tags or None)
-            except ManifestConflict:
-                continue       # re-read the advanced manifest, retry
-            self._gc_versions(table, versions,
-                              published_version=version)
-            return
-        raise ManifestConflict(
-            f"{table}: full refresh lost the manifest CAS 16 times")
+        with self._staged(df, table, partition_by) as stage:
+            for _ in range(16):    # bounded CAS retry; no data rewrite
+                m = self._read_manifest(table)
+                if expected_input_version is not None and \
+                        (m is None or m["version"] != expected_input_version):
+                    # derived-payload writer (compaction): someone committed
+                    # (or dropped/recreated the table) since the input
+                    # snapshot was read — retrying the CAS would publish a
+                    # snapshot missing their rows and their window stamp
+                    # (a vanished manifest is the same case: without that
+                    # arm a derived payload would publish as v1 over the
+                    # recreated table).  Abort; the caller reruns over
+                    # the current snapshot.
+                    now = f"v{m['version']}" if m is not None else \
+                        "a dropped/recreated manifest"
+                    raise ManifestConflict(
+                        f"{table}: manifest advanced to {now} "
+                        f"after the compaction read its input at "
+                        f"v{expected_input_version} — publishing would drop "
+                        "the concurrent commit's rows; rerun the compaction")
+                version = (m["version"] if m else 0) + 1
+                dirname = f"{table}__v{version}"
+                versions = self._next_versions(m, version, [dirname])
+                schemas = self._next_schemas(m, version, df.schema.json())
+                # a full refresh carries no window stamp (it covers
+                # everything); prior stamps prune to dirs some retained
+                # snapshot still references.  ``absorbed`` (compaction
+                # only) carries the merged-away window stamps forward as
+                # refuse-keys; a true full refresh passes None, clearing
+                # them.
+                wins = self._next_windows(m, versions)
+                # batch tags follow the window rule: compaction
+                # (preserve_windows=True) merges the tagged rows, so their
+                # replay protection carries forward; a true full refresh
+                # replaces them and clears the list — unless this full write
+                # IS a tagged micro-batch (a streaming pipeline's first
+                # batch landing on a nonexistent table), which seeds it.
+                tags = (list(m.get("batch_tags", []))
+                        if preserve_windows and m is not None else [])
+                if batch_tag is not None and batch_tag not in tags:
+                    tags.append(batch_tag)
+                tags = self._bound_tags(tags)
+                try:
+                    self._publish_manifest(table, version, versions,
+                                           expected_version=version - 1,
+                                           promote=(stage, dirname),
+                                           schemas=schemas, windows=wins,
+                                           absorbed=absorbed,
+                                           batch_tags=tags or None,
+                                           watermark=self._next_watermark(
+                                               m, upper))
+                except ManifestConflict:
+                    continue       # re-read the advanced manifest, retry
+                self._gc_versions(table, versions,
+                                  published_version=version)
+                return
+            raise ManifestConflict(
+                f"{table}: full refresh lost the manifest CAS 16 times")
 
     def _write_append(self, df: DataFrame, table: str, partition_by=(),
                       window: tuple | None = None,
-                      batch_tag: str | None = None) -> None:
-        """Append ``df`` as a new immutable dir of the live snapshot.
+                      batch_tag: str | None = None, upper=None) -> None:
+        """Append ``df`` as a new immutable dir of the live snapshot: the
+        pointer flip adds it to the snapshot's dir list, so appends are
+        as atomic as full refreshes on an object store (a crashed append
+        leaves an unreferenced orphan, never a half-visible table).
+        ``upper`` is published as the table's resume watermark in the
+        same flip, so the data and its resume point commit together.
 
         ``batch_tag`` (streaming micro-batches, r18): a content
         fingerprint of the batch this append carries.  A tag already
         recorded for the table means the batch is fully committed — the
         append is a SKIPPED no-op (exactly-once across foreachBatch
         retries and checkpoint-lineage resets, where unbounded windows
-        can't protect: they are refused as stamps below).  Manifest mode
-        records the tag in the SAME atomic pointer flip as the data;
-        rename mode stamps a sidecar after the files land (same crash
-        exposure as its window ledger, bracketed by the inflight
-        journal).
+        can't protect: they are refused as stamps below).  The tag is
+        recorded in the SAME atomic pointer flip as the data.
 
         ``window=(lower, upper)`` stamps the dir with the time window it
         carries and REPLACES any live dirs whose recorded window the new
         one fully covers — MERGE/replaceWhere semantics on the window
-        key, manifest mode only.  A re-run of an already-committed fact
-        window (late-arriving data, a healing rerun after a crash) then
-        swaps the recomputed rows in atomically instead of double-
-        counting them (pinned by
+        key.  A re-run of an already-committed fact window (late-arriving
+        data, a healing rerun after a crash) then swaps the recomputed
+        rows in atomically instead of double-counting them (pinned by
         ``test_incremental_rerun_same_window_is_idempotent``).  Forward
         windows are disjoint from every recorded stamp, so a normal
         incremental run is a pure append, exactly as before.  Replaced
         dirs stay on disk while an older retained snapshot references
         them (time travel); GC reclaims them on the usual horizon.
-        Rename mode CANNOT merge — file-level appends have no atomic
-        swap — so instead of silently double-counting it stamps each
-        windowed append in a sidecar ledger and REFUSES a rerun whose
-        window covers a recorded stamp (raising with the two honest ways
-        out: full refresh, or manifest mode — the 100 TB path — whose
-        swap-in semantics the refusal mirrors; pinned by
-        ``test_rename_mode_same_window_rerun_refuses``).
         A window with an unbounded (None) upper is refused as a stamp:
         it delimits nothing, and an unbounded stamp would cover every
         other unbounded stamp (the streaming micro-batch data-loss
         shape; see _run_fact_table)."""
         if window is not None and window[1] is None:
             window = None
-        if batch_tag is not None and batch_tag in self._recorded_tags(table):
+        m = self._read_manifest(table)
+        if m is None:
+            raise FileNotFoundError(f"no manifest for table {table!r}")
+        if batch_tag is not None and batch_tag in m.get("batch_tags", []):
             return            # batch already committed: retry is a no-op
-        if self.commit_mode == "manifest":
-            # the append lands in its OWN immutable dir and the pointer
-            # flip adds it to the snapshot's dir list — appends are as
-            # atomic as full refreshes on an object store (a crashed
-            # append leaves an unreferenced orphan, never a half-visible
-            # table).  The inflight journal still brackets the
-            # append-then-watermark pair (see below): manifest atomicity
-            # covers table visibility, not the separate watermark file.
-            if self._read_manifest(table) is None:
-                raise FileNotFoundError(f"no manifest for table {table!r}")
-            stage = self._write_stage(df, table, partition_by)
-            try:
-                self._append_manifest_cas(df, table, stage, window,
-                                          batch_tag)
-            except BaseException:
-                # a refused rerun (absorbed-window overlap) or CAS
-                # exhaustion raises AFTER the stage payload landed —
-                # without this, every refusal leaks a full copy of the
-                # append on disk until some later successful publish's
-                # _gc_versions ages it out (ADVICE r16).  A successful
-                # publish renamed the stage away, so the rmtree is a
-                # no-op there.
-                shutil.rmtree(os.path.join(self.storage, stage),
-                              ignore_errors=True)
-                raise
-            return
-        if window is not None:
-            stamps = self._rename_window_stamps().get(table, [])
-            covered = [s for s in stamps if self._window_covers(window, s)]
-            if covered:
-                lo, hi = (self._iso(b) for b in window)
-                raise ValueError(
-                    f"{table}: append window [{lo}, {hi}) covers "
-                    f"{len(covered)} already-committed window(s) "
-                    f"(e.g. [{covered[0][0]}, {covered[0][1]})) — rename "
-                    "mode has no atomic swap, so re-appending would "
-                    "double-count those rows.  Re-run as a full refresh, "
-                    "or use commit_mode='manifest' for MERGE semantics")
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._live_dir(table))
-        if window is not None:
-            # stamped AFTER the files land: a crash in between leaves the
-            # ledger behind the data, but fact appends are bracketed by
-            # the inflight journal (below), which already refuses a
-            # rerun after a mid-append crash in rename mode.
-            self._stamp_rename_window(table, window)
-        if batch_tag is not None:
-            # same land-then-stamp order and crash bracket as the window
-            # ledger above
-            self._stamp_batch_tag(table, batch_tag)
-
-    def _append_manifest_cas(self, df: DataFrame, table: str, stage: str,
-                             window: tuple | None,
-                             batch_tag: str | None = None) -> None:
-        """The manifest-mode append publish: bounded CAS retry promoting
-        the already-staged payload dir into the next snapshot.  Factored
-        out of :meth:`_write_append` so the caller can guarantee stage
-        cleanup on ANY raise (absorbed-window refusal, CAS exhaustion —
-        ADVICE r16: each leaked a full payload copy on disk)."""
         legacy_schema_cache: dict = {}
-        for _ in range(16):    # bounded CAS retry; no data rewrite
-            m = self._read_manifest(table)
-            if batch_tag is not None and batch_tag in m.get("batch_tags",
-                                                            []):
-                # a concurrent/prior writer committed this batch while we
-                # prepared (or the pre-stage check raced): nothing to
-                # publish — reclaim the staged payload HERE (the caller's
-                # cleanup only runs on raise; a silent return would leak
-                # a full copy on disk, the ADVICE r16 stage-leak class)
-                shutil.rmtree(os.path.join(self.storage, stage),
-                              ignore_errors=True)
+        with self._staged(df, table, partition_by) as stage:
+            for _ in range(16):    # bounded CAS retry; no data rewrite
+                m = self._read_manifest(table)
+                if batch_tag is not None and batch_tag in m.get(
+                        "batch_tags", []):
+                    return    # a concurrent writer committed this batch
+                version = m["version"] + 1
+                dirname = f"{table}__v{version}"
+                # live_dirs is re-resolved per attempt: on a lost CAS the
+                # re-read picks up the OTHER writer's dirs, so both
+                # appends end up in the published snapshot — the exact
+                # lost-update the plain read-modify-write allowed
+                live_dirs = self._manifest_versions(m)[str(m["version"])]
+                if window is not None:
+                    # windows a compaction merged away have no dir to
+                    # swap — an overlapping rerun would silently double
+                    # those rows, so it is refused
+                    hit = [s for s in m.get("absorbed", [])
+                           if self._window_overlaps(window, s)]
+                    if hit:
+                        lo, hi = (self._iso(b) for b in window)
+                        raise ValueError(
+                            f"{table}: append window [{lo}, {hi}) overlaps "
+                            f"{len(hit)} window(s) merged by compaction "
+                            f"(e.g. [{hit[0][0]}, {hit[0][1]})) — their "
+                            "rows no longer live in a swappable dir, so "
+                            "re-appending would double-count them.  "
+                            "Re-run as a full refresh")
+                    stamps = m.get("windows", {})
+                    live_dirs = [d for d in live_dirs
+                                 if not self._window_covers(window,
+                                                            stamps.get(d))]
+                versions = self._next_versions(m, version,
+                                               live_dirs + [dirname])
+                # evolved snapshot schema: previous + any appended columns
+                prev_schema = m.get("schemas", {}).get(str(m["version"]))
+                if prev_schema is None:
+                    # pre-schema manifest (published before schema
+                    # tracking existed): footer-infer the live
+                    # snapshot's schema so columns present in older
+                    # files but absent from this append survive the
+                    # union, and the type-conflict guard covers them.
+                    # mergeSchema because a legacy snapshot can span
+                    # MULTIPLE dirs with heterogeneous file schemas
+                    # (old narrow appends + a wide refresh) — a single
+                    # footer could record a narrowed schema and drop
+                    # columns from all future reads.  The every-footer
+                    # cost is paid once per SNAPSHOT (cached across the
+                    # CAS retries of this call, so N contending legacy
+                    # writers do not re-read every footer per lost CAS);
+                    # the publish records the merged schema and the path
+                    # never runs again.
+                    snap = tuple(self._snapshot_paths(table, m=m))
+                    if legacy_schema_cache.get("paths") != snap:
+                        legacy_schema_cache["paths"] = snap
+                        legacy_schema_cache["schema"] = (
+                            self.spark.read
+                            .option("mergeSchema", "true")
+                            .parquet(*snap).schema.json())
+                    prev_schema = legacy_schema_cache["schema"]
+                schemas = self._next_schemas(
+                    m, version, self._union_schema(prev_schema, df))
+                wins = self._next_windows(m, versions, dirname, window)
+                tags = list(m.get("batch_tags", []))
+                if batch_tag is not None:
+                    tags.append(batch_tag)
+                tags = self._bound_tags(tags)
+                try:
+                    self._publish_manifest(table, version, versions,
+                                           expected_version=version - 1,
+                                           promote=(stage, dirname),
+                                           schemas=schemas, windows=wins,
+                                           absorbed=m.get("absorbed"),
+                                           batch_tags=tags or None,
+                                           watermark=self._next_watermark(
+                                               m, upper))
+                except ManifestConflict:
+                    continue
+                self._gc_versions(table, versions,
+                                  published_version=version)
                 return
-            version = m["version"] + 1
-            dirname = f"{table}__v{version}"
-            # live_dirs is re-resolved per attempt: on a lost CAS the
-            # re-read picks up the OTHER writer's dirs, so both
-            # appends end up in the published snapshot — the exact
-            # lost-update the plain read-modify-write allowed
-            live_dirs = self._manifest_versions(m)[str(m["version"])]
-            if window is not None:
-                # windows a compaction merged away have no dir to
-                # swap — an overlapping rerun would silently double
-                # those rows, so it is refused (the rename-mode
-                # semantics; r16 review)
-                hit = [s for s in m.get("absorbed", [])
-                       if self._window_overlaps(window, s)]
-                if hit:
-                    lo, hi = (self._iso(b) for b in window)
-                    raise ValueError(
-                        f"{table}: append window [{lo}, {hi}) overlaps "
-                        f"{len(hit)} window(s) merged by compaction "
-                        f"(e.g. [{hit[0][0]}, {hit[0][1]})) — their "
-                        "rows no longer live in a swappable dir, so "
-                        "re-appending would double-count them.  "
-                        "Re-run as a full refresh")
-                stamps = m.get("windows", {})
-                live_dirs = [d for d in live_dirs
-                             if not self._window_covers(window,
-                                                        stamps.get(d))]
-            versions = self._next_versions(m, version,
-                                           live_dirs + [dirname])
-            # evolved snapshot schema: previous + any appended columns
-            prev_schema = m.get("schemas", {}).get(str(m["version"]))
-            if prev_schema is None:
-                # pre-schema manifest (published before schema
-                # tracking existed): footer-infer the live
-                # snapshot's schema so columns present in older
-                # files but absent from this append survive the
-                # union, and the type-conflict guard covers them.
-                # mergeSchema because a legacy snapshot can span
-                # MULTIPLE dirs with heterogeneous file schemas
-                # (old narrow appends + a wide refresh) — a single
-                # footer could record a narrowed schema and drop
-                # columns from all future reads.  The every-footer
-                # cost is paid once per SNAPSHOT (cached across the
-                # CAS retries of this call — N contending legacy
-                # writers previously re-read every footer per lost
-                # CAS, r16 review); the publish records the merged
-                # schema and the path never runs again.
-                snap = tuple(self._snapshot_paths(table, m=m))
-                if legacy_schema_cache.get("paths") != snap:
-                    legacy_schema_cache["paths"] = snap
-                    legacy_schema_cache["schema"] = (
-                        self.spark.read
-                        .option("mergeSchema", "true")
-                        .parquet(*snap).schema.json())
-                prev_schema = legacy_schema_cache["schema"]
-            schemas = self._next_schemas(
-                m, version, self._union_schema(prev_schema, df))
-            wins = self._next_windows(m, versions, dirname, window)
-            tags = list(m.get("batch_tags", []))
-            if batch_tag is not None:
-                tags.append(batch_tag)
-            tags = self._bound_tags(tags)
-            try:
-                self._publish_manifest(table, version, versions,
-                                       expected_version=version - 1,
-                                       promote=(stage, dirname),
-                                       schemas=schemas, windows=wins,
-                                       absorbed=m.get("absorbed"),
-                                       batch_tags=tags or None)
-            except ManifestConflict:
-                continue
-            self._gc_versions(table, versions,
-                              published_version=version)
-            return
-        raise ManifestConflict(
-            f"{table}: append lost the manifest CAS 16 times")
-
-    # --- rename-mode window ledger -----------------------------------------
-    # Manifest mode records per-dir window stamps inside the manifest;
-    # rename mode appends files into one live dir, so its stamps live in
-    # a sidecar JSON keyed by table.  A full refresh clears the table's
-    # stamps (it covers everything, same as manifest dropping old dirs).
-
-    @staticmethod
-    def _atomic_json(path: str, obj) -> None:
-        """Sidecar state files (watermarks, inflight journal, window
-        ledger) rewrite via tmp + os.replace — an in-place open('w')
-        truncate-then-write leaves partial JSON after a crash/disk-full,
-        and these files ARE the crash-recovery state (r16 review; the
-        manifest pointer and index_lifecycle.flip_pointer already used
-        this pattern)."""
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(obj, fh, indent=2)
-        os.replace(tmp, path)
-
-    @property
-    def _rename_windows_path(self) -> str:
-        return os.path.join(self.storage, "_rename_windows.json")
-
-    def _rename_window_stamps(self) -> dict:
-        if os.path.exists(self._rename_windows_path):
-            with open(self._rename_windows_path) as fh:
-                return json.load(fh)
-        return {}
-
-    def _stamp_rename_window(self, table: str, window: tuple) -> None:
-        stamps = self._rename_window_stamps()
-        stamps.setdefault(table, []).append(
-            [self._iso(window[0]), self._iso(window[1])])
-        self._atomic_json(self._rename_windows_path, stamps)
-
-    def _clear_rename_windows(self, table: str) -> None:
-        stamps = self._rename_window_stamps()
-        if stamps.pop(table, None) is not None:
-            self._atomic_json(self._rename_windows_path, stamps)
+            raise ManifestConflict(
+                f"{table}: append lost the manifest CAS 16 times")
 
     # --- micro-batch tag ledger (r18) ---------------------------------------
     # Exactly-once for streaming fact appends: each micro-batch's content
     # fingerprint is recorded with the data it produced (inside the
-    # manifest in manifest mode — atomic with the pointer flip; in this
-    # sidecar in rename mode), and _write_append skips a batch whose tag
-    # is already recorded.  Unbounded micro-batch windows are refused as
-    # window stamps (see _run_fact_table), so without tags a foreachBatch
-    # retry double-counted silently.
+    # manifest — atomic with the pointer flip), and _write_append skips a
+    # batch whose tag is already recorded.  Unbounded micro-batch windows
+    # are refused as window stamps (see _run_fact_table), so without tags
+    # a foreachBatch retry double-counted silently.
 
     # Tag retention bound (ADVICE r18): without one, every micro-batch
     # grew the ledger forever — manifest size and the per-append
@@ -1119,151 +952,20 @@ class Engine:
         appended in commit order, so the slice drops the oldest."""
         return tags[-self.BATCH_TAG_RETENTION:]
 
-    @property
-    def _batch_tags_path(self) -> str:
-        return os.path.join(self.storage, "_batch_tags.json")
-
-    def _recorded_tags(self, table: str) -> list:
-        if self.commit_mode == "manifest":
-            m = self._read_manifest(table)
-            return m.get("batch_tags", []) if m else []
-        if os.path.exists(self._batch_tags_path):
-            with open(self._batch_tags_path) as fh:
-                return json.load(fh).get(table, [])
-        return []
-
-    def _stamp_batch_tag(self, table: str, tag: str) -> None:
-        """Rename-mode sidecar stamp (manifest mode records tags inside
-        the manifest publish itself — never call this there for appends;
-        _write_full calls it for the rename-mode first-batch full write)."""
-        if self.commit_mode == "manifest":
-            return
-        tags = {}
-        if os.path.exists(self._batch_tags_path):
-            with open(self._batch_tags_path) as fh:
-                tags = json.load(fh)
-        per = tags.setdefault(table, [])
-        if tag not in per:
-            per.append(tag)
-            tags[table] = self._bound_tags(per)
-            self._atomic_json(self._batch_tags_path, tags)
-
-    def _clear_batch_tags(self, table: str) -> None:
-        if self.commit_mode == "manifest":
-            return            # the full publish writes batch_tags itself
-        if not os.path.exists(self._batch_tags_path):
-            return
-        with open(self._batch_tags_path) as fh:
-            tags = json.load(fh)
-        if tags.pop(table, None) is not None:
-            self._atomic_json(self._batch_tags_path, tags)
-
     # --- watermarks --------------------------------------------------------
 
-    @property
-    def _wm_path(self) -> str:
-        return os.path.join(self.storage, "_watermarks.json")
-
     def watermarks(self) -> dict:
-        if os.path.exists(self._wm_path):
-            with open(self._wm_path) as fh:
-                return json.load(fh)
-        return {}
-
-    def _store_watermark(self, table: str, upper) -> None:
-        """Record the exclusive upper bound of the last refresh as an ISO
-        timestamp — the resume point for the next incremental run (see
-        run_fact).  Unbounded refreshes (upper=None) store nothing."""
-        if upper is None:
-            return
-        wm = self.watermarks()
-        wm[table] = upper.isoformat() if hasattr(upper, "isoformat") else str(upper)
-        self._atomic_json(self._wm_path, wm)
-
-    def _commit_watermark(self, table: str, upper) -> None:
-        """Watermark update + inflight-marker clear in ONE atomic write
-        (r16 review): they live in the same file, and a crash between
-        two separate writes left a stale inflight marker that bricked
-        the next incremental run after a fully successful append."""
-        wm = self.watermarks()
-        if upper is not None:
-            wm[table] = (upper.isoformat()
-                         if hasattr(upper, "isoformat") else str(upper))
-        wm.get("__inflight__", {}).pop(table, None)
-        self._atomic_json(self._wm_path, wm)
-
-    # Incremental fact appends are not atomic with the watermark update:
-    # a crash between the append's job commit and _store_watermark would
-    # make a watermark-resumed rerun append the same window twice — and
-    # doubled counts/sums are indistinguishable from legitimate mergeable
-    # partials, so compaction cannot heal them.  An in-flight marker
-    # brackets the append; finding a stale one fails loudly instead.
-    # (Incremental DIMENSION appends are replay-idempotent — the anti-join
-    # drops already-present rows — so only facts are journaled.)
-
-    def _inflight(self) -> dict:
-        return self.watermarks().get("__inflight__", {})
-
-    def _mark_inflight(self, table: str, clear: bool = False) -> None:
-        wm = self.watermarks()
-        inf = wm.setdefault("__inflight__", {})
-        if clear:
-            inf.pop(table, None)
-        else:
-            # manifest mode records the pre-append manifest version: on
-            # resume, an unchanged version proves the append never became
-            # visible (crash before the pointer flip) and the retry is
-            # safe — only a version that DID advance means the append
-            # committed without its watermark (double-count risk).
-            # rename mode can't tell the two apart (files appear as they
-            # land), so it stores an opaque True and always refuses.
-            if self.commit_mode == "manifest":
-                m = self._read_manifest(table)
-                inf[table] = m["version"] if m else 0
-            else:
-                inf[table] = True
-        self._atomic_json(self._wm_path, wm)
-
-    def _inflight_retry_is_safe(self, table: str,
-                                window: tuple | None = None,
-                                batch_tag: str | None = None) -> bool:
-        """True when the interrupted append provably never published — or
-        (window-stamped manifest appends, r12) when the rerun's window
-        fully covers every dir the interrupted run DID publish, so the
-        rerun atomically swaps the half-committed window out instead of
-        doubling it — or (tagged micro-batches, r18) when the batch's
-        content tag is already recorded: the interrupted run provably
-        COMPLETED its append (tag and data commit together in manifest
-        mode), only the watermark commit was lost, and the retry's
-        _write_append will no-op-skip before this run re-commits it."""
-        if batch_tag is not None and batch_tag in self._recorded_tags(table):
-            return True
-        marker = self._inflight().get(table)
-        # bool is an int subclass: a rename-mode opaque `True` marker read
-        # by a manifest-mode engine must NOT compare equal to version 1
-        if (self.commit_mode != "manifest" or isinstance(marker, bool)
-                or not isinstance(marker, int)):
-            return False
-        m = self._read_manifest(table)
-        if m is None:
-            return False
-        if m["version"] == marker:
-            return True        # never published; plain retry is safe
-        if window is None:
-            return False
-        # The interrupted append DID publish.  Dir names carry the
-        # version they published at (`<table>__vN`), so the dirs it (or
-        # any later writer) added are exactly the live dirs with a
-        # version past the marker — no retention of the marker version
-        # itself is needed.  The rerun is safe iff every one of them is
-        # window-stamped and fully covered: the append then swaps the
-        # half-committed window out instead of doubling it.
-        prefix = table + "__v"
-        stamps = m.get("windows", {})
-        added = [d for d in self._manifest_versions(m)[str(m["version"])]
-                 if (self._dir_version(d, prefix) or 0) > marker]
-        return all(self._window_covers(window, stamps.get(d))
-                   for d in added)
+        """Resume watermark per table, read from each table's manifest
+        (the publish that committed the data recorded it)."""
+        suffix = ".manifest.json"
+        out = {}
+        for name in sorted(os.listdir(self.storage)):
+            if name.endswith(suffix):
+                table = name[:-len(suffix)]
+                wm = (self._read_manifest(table) or {}).get("watermark")
+                if wm is not None:
+                    out[table] = wm
+        return out
 
     # --- execution ---------------------------------------------------------
 
@@ -1302,7 +1004,8 @@ class Engine:
         returns the extracted fact table name.
 
         Incremental runs with no explicit lower bound resume from the
-        stored watermark (the previous run's upper bound); pass
+        fact table's watermark (the previous run's upper bound, published
+        in the same manifest flip as that run's rows); pass
         ``resume=False`` to process an unbounded window instead (the
         streaming pipeline does — its micro-batches are already bounded).
 
@@ -1316,12 +1019,13 @@ class Engine:
         # long-lived Engine's second incremental run_fact previously
         # skipped dimension population and misattributed new members to
         # the missing-FK sentinel)
-        if not getattr(self, "_batch_dim_memo", False) or                 not hasattr(self, "_populated_this_run"):
+        if not self._batch_dim_memo:
             self._populated_this_run = set()
         from .extractor import extract_all_dimension_tables
 
         if resume and mode == PopulationMode.INCREMENTAL and time_lower is None:
-            stored = self.watermarks().get(extract_fact_table(self.env, fact).name)
+            m = self._read_manifest(extract_fact_table(self.env, fact).name)
+            stored = m.get("watermark") if m else None
             if stored is not None:
                 import datetime as _dt
 
@@ -1335,11 +1039,8 @@ class Engine:
             self._run_dimension(dim_fact, dim_table.name, mode,
                                 time_upper, time_lower)
             self._populated_this_run.add(dim_table.name)
-        produced = self._run_fact_table(fact, mode, time_upper, time_lower,
-                                        batch_tag=batch_tag)
-        # watermark + inflight-clear as ONE atomic write (r16 review)
-        self._commit_watermark(produced, time_upper)
-        return produced
+        return self._run_fact_table(fact, mode, time_upper, time_lower,
+                                    batch_tag=batch_tag)
 
     def _run_dimension(self, fact: Fact, dim_table: str, mode: PopulationMode,
                        time_upper, time_lower) -> None:
@@ -1350,13 +1051,12 @@ class Engine:
                 self.env, fact, dim_table, self.sources,
                 mode=PopulationMode.INCREMENTAL, time_upper=time_upper,
                 time_lower=time_lower, existing_dim=existing)
-            self._write_append(new_rows, dim_table)
+            self._write_append(new_rows, dim_table, upper=time_upper)
         else:
             df = dimension_population_df(
                 self.env, fact, dim_table, self.sources,
                 mode=PopulationMode.FULL, time_upper=time_upper)
-            self._write_full(df, dim_table)
-        self._store_watermark(dim_table, time_upper)
+            self._write_full(df, dim_table, upper=time_upper)
 
     def _run_fact_table(self, fact: Fact, mode: PopulationMode,
                         time_upper, time_lower,
@@ -1384,37 +1084,15 @@ class Engine:
         # pure additive, never replaced, never replacing.
         window = (time_lower, time_upper) if time_upper is not None else None
         if mode == PopulationMode.INCREMENTAL and self.table_exists(derived.name):
-            if (derived.name in self._inflight()
-                    and not self._inflight_retry_is_safe(derived.name,
-                                                         window,
-                                                         batch_tag)):
-                raise RuntimeError(
-                    f"previous incremental append to {derived.name} did not "
-                    f"complete (crash between append and watermark update); "
-                    f"the window may be partially committed — re-run the "
-                    f"same window (manifest mode swaps it in atomically), "
-                    f"run a full refresh, or verify the table and clear "
-                    f"the '__inflight__' entry in _watermarks.json")
-            self._mark_inflight(derived.name)
             # window-stamped: a rerun of an already-committed window
             # REPLACES that window's dirs instead of double-counting
-            # (manifest mode; see _write_append)
-            try:
-                self._write_append(df, derived.name, partition_by,
-                                   window=window, batch_tag=batch_tag)
-            except ValueError:
-                # a window REFUSAL (rename-ledger cover / compaction-
-                # absorbed overlap) raises before anything lands in the
-                # live table — clearing the bracket keeps the next run's
-                # inflight check telling the truth (a stale marker here
-                # would surface as a spurious mid-append-crash error
-                # once the manifest version moves, e.g. via compaction)
-                self._mark_inflight(derived.name, clear=True)
-                raise
+            # (see _write_append)
+            self._write_append(df, derived.name, partition_by,
+                               window=window, batch_tag=batch_tag,
+                               upper=time_upper)
         else:
             self._write_full(df, derived.name, partition_by,
-                             batch_tag=batch_tag)
-            self._mark_inflight(derived.name, clear=True)  # full run heals
+                             batch_tag=batch_tag, upper=time_upper)
         return derived.name
 
     def run(self, mode: PopulationMode = PopulationMode.FULL, time_upper=None,
@@ -1452,24 +1130,17 @@ class Engine:
 
         s = self.env.settings
         derived = extract_fact_table(self.env, fact)
-        # manifest mode: ONE manifest read anchors the whole compaction —
-        # the input rows, the absorbed refuse-keys, and the publish's
-        # expected version all come from the same snapshot.  A concurrent
-        # commit between this read and the publish makes _write_full
-        # abort (ManifestConflict) instead of publishing a snapshot
-        # missing that commit's rows and window stamp (ADVICE r16 TOCTOU;
-        # previously the CAS loop silently retried over the advance).
-        input_version: int | None = None
-        m0 = None
-        if self.commit_mode == "manifest":
-            m0 = self._read_manifest(derived.name)
-            if m0 is not None:
-                input_version = m0["version"]
-                df = self.read_table(derived.name, version=input_version)
-            else:
-                df = self.read_table(derived.name)
-        else:
-            df = self.read_table(derived.name)
+        # ONE manifest read anchors the whole compaction — the input
+        # rows, the absorbed refuse-keys, and the publish's expected
+        # version all come from the same snapshot.  A concurrent commit
+        # between this read and the publish makes _write_full abort
+        # (ManifestConflict) instead of publishing a snapshot missing
+        # that commit's rows and window stamp (a silent CAS retry over
+        # the advance would).
+        m0 = self._read_manifest(derived.name)
+        if m0 is None:
+            raise FileNotFoundError(f"no manifest for table {derived.name!r}")
+        df = self.read_table(derived.name, version=m0["version"])
         measure_aggs, measures = [], set()
         for fc in fact.columns:
             c, t = fc.target_column, fc.type
@@ -1495,26 +1166,24 @@ class Engine:
                 measures.add(c)
         keys = [c for c in df.columns if c not in measures]
         out = df.groupBy(*keys).agg(*measure_aggs).select(*df.columns)
-        # safe: _write_full materializes into the staging dir before the
-        # live dir (our input) is replaced; re-applying the partitioning
-        # keeps the day/tenant directory layout through compaction
+        # safe: _write_full materializes into a new version dir; the
+        # input dirs stay untouched until GC after the pointer flip.
+        # Re-applying the partitioning keeps the day/tenant directory
+        # layout through compaction
         out, partition_by = self._with_fact_partitioning(fact, out)
         # compaction is NOT a full refresh: the windowed rows it merges
         # still exist in the output, so the same-window rerun protection
         # must survive it (r16 review — _write_full's default clears it,
-        # silently re-enabling double-counting appends).  Manifest mode
-        # carries every live dir's stamp (plus previously absorbed ones)
-        # forward as refuse-keys; rename mode keeps its ledger.
-        absorbed = None
-        if m0 is not None:
-            live = self._manifest_versions(m0)[str(m0["version"])]
-            stamps = m0.get("windows", {})
-            absorbed = (list(m0.get("absorbed", []))
-                        + [stamps[d] for d in live if stamps.get(d)])
-            absorbed = absorbed or None
+        # silently re-enabling double-counting appends).  Every live
+        # dir's stamp (plus previously absorbed ones) carries forward as
+        # a refuse-key; the watermark carries forward too (no upper).
+        live = self._manifest_versions(m0)[str(m0["version"])]
+        stamps = m0.get("windows", {})
+        absorbed = (list(m0.get("absorbed", []))
+                    + [stamps[d] for d in live if stamps.get(d)])
         self._write_full(out, derived.name, partition_by,
-                         absorbed=absorbed, preserve_windows=True,
-                         expected_input_version=input_version)
+                         absorbed=absorbed or None, preserve_windows=True,
+                         expected_input_version=m0["version"])
 
     # --- JDBC sink (Postgres-sink parity, Main.hs:35-83) -------------------
 

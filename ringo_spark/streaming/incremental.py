@@ -169,7 +169,7 @@ class StreamingPipeline:
         # (a fresh lineage restarts at 0 — the r17 streaming-dedup
         # lesson), so the exactly-once key must be the batch's content.
         # One tiny agg job per batch; the engine skips the fact append
-        # when the tag is already recorded (manifest mode records the
+        # when the tag is already recorded (the manifest records the
         # tag in the same atomic pointer flip as the data).
         from ..index_lifecycle import batch_fingerprint
 

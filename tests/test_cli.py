@@ -134,10 +134,14 @@ def test_cli_execute_mode(spark, input_yaml, tmp_path):
                "--data", "/root/testdata/sf0.001", "--storage", wh,
                "--time-unit", "minute", "--time-upper", "2100-01-01"])
     assert rc == 0
-    fact = spark.read.parquet(os.path.join(wh, "fact_events_by_minute"))
-    assert fact.count() > 0
-    wm = json.load(open(os.path.join(wh, "_watermarks.json")))
-    assert "fact_events_by_minute" in wm
+    assert _read_fact(spark, wh).count() > 0
+
+
+def _read_fact(spark, wh):
+    """The live snapshot of the CLI run's fact table, via its manifest."""
+    m = json.load(open(os.path.join(wh, "fact_events_by_minute.manifest.json")))
+    return spark.read.parquet(
+        *[os.path.join(wh, d) for d in m["versions"][str(m["version"])]])
 
 
 def test_cli_execute_manifest_mode(spark, input_yaml, tmp_path):
@@ -145,11 +149,16 @@ def test_cli_execute_manifest_mode(spark, input_yaml, tmp_path):
     rc = main([input_yaml, out, "--execute",
                "--data", "/root/testdata/sf0.001", "--storage", wh,
                "--time-unit", "minute", "--time-upper", "2100-01-01",
-               "--commit-mode", "manifest", "--keep-versions", "2"])
+               "--keep-versions", "2"])
     assert rc == 0
     m = json.load(open(os.path.join(
         wh, "fact_events_by_minute.manifest.json")))
     assert m["version"] == 1
+    # the publish carries the run's --time-upper as the resume watermark
+    assert m["watermark"] == "2100-01-01T00:00:00"
+    # the manifests are the warehouse's only state
+    assert not {"_watermarks.json", "_rename_windows.json",
+                "_batch_tags.json"} & set(os.listdir(wh))
     fact = spark.read.parquet(os.path.join(
         wh, m["versions"]["1"][0]))
     assert fact.count() > 0
@@ -195,8 +204,7 @@ def test_cli_salt_tenant_buckets_flag(spark, input_yaml, tmp_path):
                    "--time-unit", "minute", "--time-upper", "2100-01-01",
                    *extra])
         assert rc == 0
-    a = spark.read.parquet(os.path.join(plain_wh, "fact_events_by_minute"))
-    b = spark.read.parquet(os.path.join(salted_wh, "fact_events_by_minute"))
+    a, b = _read_fact(spark, plain_wh), _read_fact(spark, salted_wh)
     assert sorted(a.columns) == sorted(b.columns)
     cols = sorted(a.columns)
     assert sorted(map(tuple, a.select(*cols).collect())) == \

@@ -1,5 +1,6 @@
-"""Engine driver tests: full run, incremental run, staging swap, watermark
-store, artifact parity (dependencies/dimensions/facts JSON + SQL files)."""
+"""Engine tests: full run, incremental run, manifest commits
+(data, watermark and batch tags in one publish), crash recovery, artifact
+parity (dependencies/dimensions/facts JSON + SQL files)."""
 
 import datetime as dt
 import json
@@ -48,16 +49,6 @@ def test_incremental_run_appends_window(engine):
     assert dim.count() == dim.select("id").distinct().count()
 
 
-def test_full_refresh_swaps_atomically(engine, tmp_path):
-    engine.run(PopulationMode.FULL, T_FAR)
-    before = engine.read_table("fact_orders_by_day").count()
-    engine.run(PopulationMode.FULL, T_FAR)  # second full refresh: swap, not append
-    after = engine.read_table("fact_orders_by_day").count()
-    assert before == after
-    assert not os.path.exists(
-        os.path.join(engine.storage, "fact_orders_by_day__staging"))
-
-
 def test_artifacts(engine, tmp_path):
     out = str(tmp_path / "artifacts")
     engine.write_artifacts(out)
@@ -80,7 +71,7 @@ def test_partitioned_fact_write(spark, tmp_path):
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "w2"), partition_facts=True)
     eng.load_sources("/root/testdata/sf0.001")
     eng.run_fact(ORDERS_ENV.find_fact("orders"), PopulationMode.FULL, T_FAR)
-    base = os.path.join(eng.storage, "fact_orders_by_day")
+    (base,) = eng._snapshot_paths("fact_orders_by_day")
     # hive-style day partitions on disk -> partition pruning at read time
     assert any(d.startswith("o_orderdate_day=") for d in os.listdir(base))
 
@@ -94,14 +85,16 @@ def test_compact_preserves_partitioning(spark, tmp_path):
     eng.compact_fact(fact)
     after = eng.read_table("fact_orders_by_day")
     assert after.count() == before  # full refresh was already one-row-per-grain
-    base = os.path.join(eng.storage, "fact_orders_by_day")
+    (base,) = eng._snapshot_paths("fact_orders_by_day")
     assert any(d.startswith("o_orderdate_day=") for d in os.listdir(base)), \
         "compaction dropped the day directory partitioning"
 
 
 def test_crash_during_swap_leaves_readable_table(engine, monkeypatch):
-    """Kill the swap between rename-aside and rename-in: the previous table
-    must stay recoverable, and the next write must heal it."""
+    """Kill the refresh at the rename that promotes its staged payload to
+    the version dir (inside the publish, before the pointer flip): the
+    previous snapshot must stay readable, and the next write must
+    converge without leftovers."""
     import ringo_spark.engine as engmod
 
     engine.run(PopulationMode.FULL, T_ORDERS_MID)
@@ -110,9 +103,9 @@ def test_crash_during_swap_leaves_readable_table(engine, monkeypatch):
     real_rename = os.rename
 
     def crashing_rename(src, dst):
-        # crash exactly at the fact table's rename-in step (dims already
-        # swapped), after live was renamed aside
-        if src.endswith("__staging") and "fact_orders_by_day" in src:
+        # crash exactly at the fact table's promote step (dims already
+        # published)
+        if "fact_orders_by_day__stage_" in src:
             raise RuntimeError("simulated crash mid-swap")
         return real_rename(src, dst)
 
@@ -121,45 +114,93 @@ def test_crash_during_swap_leaves_readable_table(engine, monkeypatch):
         engine.run(PopulationMode.FULL, T_FAR)
     monkeypatch.undo()
 
-    # crashed between live->old and staging->live: read recovers from old
+    assert engine._read_manifest("fact_orders_by_day")["version"] == 1
     assert engine.read_table("fact_orders_by_day").count() == before
     # and a clean re-run completes the refresh
     engine.run(PopulationMode.FULL, T_FAR)
     assert engine.read_table("fact_orders_by_day").count() >= before
-    assert not os.path.exists(
-        os.path.join(engine.storage, "fact_orders_by_day__old"))
+    left = [d for d in os.listdir(engine.storage)
+            if d.startswith("fact_orders_by_day__")]
+    assert left == ["fact_orders_by_day__v2"]
 
 
-def test_resume_refuses_after_unclean_incremental_append(engine, monkeypatch):
-    """A crash between an incremental fact append and its watermark update
-    must NOT lead to a silent double-append on resume (doubled counts are
-    indistinguishable from mergeable partials) — the engine fails loudly;
-    a full refresh heals."""
+def _fact_rows(eng) -> dict:
+    """Every fact table's rows (sketch columns aside: their bytes need
+    not be canonical), order-insensitive."""
+    out = {}
+    for t in ("fact_orders_by_day", "fact_lineitem_by_day"):
+        df = eng.read_table(t)
+        df = df.select(*[c for c, typ in df.dtypes if typ != "binary"])
+        out[t] = sorted(map(tuple, df.collect()), key=repr)
+    return out
+
+
+def _uncrashed_twin(eng) -> dict:
+    """Fact rows of a fresh engine that ran the same FULL-then-INCREMENTAL
+    refresh with no crash."""
+    twin = Engine(eng.spark, ORDERS_ENV, eng.storage + "_twin")
+    twin.sources = dict(eng.sources)
+    twin.run(PopulationMode.FULL, T_ORDERS_MID)
+    twin.run(PopulationMode.INCREMENTAL, T_FAR)
+    return _fact_rows(twin)
+
+
+def _crash_fact_publish(monkeypatch, after: bool) -> None:
+    """Make the next ``fact_orders_by_day`` manifest flip crash, just
+    before (``after=False``) or just after its ``os.replace``."""
+    import ringo_spark.engine as engmod
+
+    real_replace = os.replace
+
+    def crashing_replace(src, dst):
+        hit = dst.endswith("fact_orders_by_day.manifest.json")
+        if hit and not after:
+            raise RuntimeError("simulated crash at the publish")
+        real_replace(src, dst)
+        if hit:
+            raise RuntimeError("simulated crash at the publish")
+
+    monkeypatch.setattr(engmod.os, "replace", crashing_replace)
+
+
+def test_resume_after_crash_before_append_publish_matches_twin(
+        engine, monkeypatch):
+    """A crash before the fact's pointer flip publishes neither the
+    window's rows nor its watermark, so a plain resumed run re-derives
+    the same window and ends exactly where an uncrashed run does."""
     engine.run(PopulationMode.FULL, T_ORDERS_MID)
-
-    orig = Engine._commit_watermark
-
-    def crashing_store(self, table, upper):
-        if table.startswith("fact_"):
-            raise RuntimeError("simulated crash before watermark")
-        return orig(self, table, upper)
-
-    monkeypatch.setattr(Engine, "_commit_watermark", crashing_store)
+    _crash_fact_publish(monkeypatch, after=False)
     with pytest.raises(RuntimeError, match="simulated crash"):
         engine.run(PopulationMode.INCREMENTAL, T_FAR)
     monkeypatch.undo()
 
-    # the append committed but the watermark didn't: resume refuses
-    with pytest.raises(RuntimeError, match="did not complete"):
-        engine.run(PopulationMode.INCREMENTAL, T_FAR)
+    m = engine._read_manifest("fact_orders_by_day")
+    assert m["version"] == 1
+    assert dt.datetime.fromisoformat(m["watermark"]) == T_ORDERS_MID
+    engine.run(PopulationMode.INCREMENTAL, T_FAR)
+    assert _fact_rows(engine) == _uncrashed_twin(engine)
 
-    # full refresh heals the table and clears the in-flight marker
-    engine.run(PopulationMode.FULL, T_FAR)
+
+def test_resume_after_crash_after_append_publish_doubles_nothing(
+        engine, monkeypatch):
+    """A crash right after the fact's pointer flip: the manifest already
+    holds the window's rows AND the new watermark (one publish), so the
+    resumed run starts past the window and doubles nothing."""
+    engine.run(PopulationMode.FULL, T_ORDERS_MID)
+    _crash_fact_publish(monkeypatch, after=True)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        engine.run(PopulationMode.INCREMENTAL, T_FAR)
+    monkeypatch.undo()
+
+    m = engine._read_manifest("fact_orders_by_day")
+    assert m["version"] == 2
+    assert dt.datetime.fromisoformat(m["watermark"]) == T_FAR
+    engine.run(PopulationMode.INCREMENTAL, T_FAR)
+    assert _fact_rows(engine) == _uncrashed_twin(engine)
     df = engine.read_table("fact_orders_by_day")
     keys = ["o_orderdate_day_id", "o_custkey", "order_priority_id",
             "order_status_id"]
     assert df.count() == df.select(*keys).distinct().count()
-    engine.run(PopulationMode.INCREMENTAL, T_FAR)  # clean incrementals again
 
 
 def test_incremental_resumes_from_stored_watermark(engine):
@@ -175,22 +216,16 @@ def test_incremental_resumes_from_stored_watermark(engine):
     assert df.count() == df.select(*keys).distinct().count()
 
 
-@pytest.fixture
-def manifest_engine(spark, tmp_path):
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "mwarehouse"),
-                 commit_mode="manifest")
-    eng.load_sources("/root/testdata/sf0.001")
-    return eng
-
-
-def test_manifest_full_and_incremental_run(manifest_engine):
-    eng = manifest_engine
+def test_manifest_full_and_incremental_run(engine):
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     n1 = eng.read_table("fact_orders_by_day").count()
     m = json.load(open(os.path.join(eng.storage,
                                     "fact_orders_by_day.manifest.json")))
     assert m["version"] == 1
     assert m["versions"] == {"1": ["fact_orders_by_day__v1"]}
+    # the publish carries the refresh's resume watermark
+    assert dt.datetime.fromisoformat(m["watermark"]) == T_ORDERS_MID
     # schema-on-manifest (r10): the publish records the snapshot schema
     cols = [f["name"] for f in json.loads(m["schemas"]["1"])["fields"]]
     assert "o_orderdate_day_id" in cols and "order_count" in cols
@@ -205,8 +240,8 @@ def test_manifest_full_and_incremental_run(manifest_engine):
                                    "fact_orders_by_day__v2"]
 
 
-def test_manifest_refresh_bumps_version_and_gcs_old(manifest_engine):
-    eng = manifest_engine
+def test_manifest_refresh_bumps_version_and_gcs_old(engine):
+    eng = engine
     eng.run(PopulationMode.FULL, T_FAR)
     before = eng.read_table("fact_orders_by_day").count()
     eng.run(PopulationMode.FULL, T_FAR)
@@ -220,13 +255,13 @@ def test_manifest_refresh_bumps_version_and_gcs_old(manifest_engine):
 
 
 def test_manifest_crash_before_publish_leaves_old_version_live(
-        manifest_engine, monkeypatch):
+        engine, monkeypatch):
     """Kill the refresh after the new version dir is written but before
     the pointer flips: readers must still resolve the previous complete
     version, and a clean re-run must converge (GC'ing the orphan)."""
     import ringo_spark.engine as engmod
 
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     before = eng.read_table("fact_orders_by_day").count()
 
@@ -256,14 +291,14 @@ def test_manifest_crash_before_publish_leaves_old_version_live(
 
 
 def test_manifest_append_crash_leaves_snapshot_unchanged(
-        manifest_engine, monkeypatch):
+        engine, monkeypatch):
     """A crash between the append's data write and the pointer flip must
     leave the previous snapshot intact — the failure mode that motivated
     the dirs-list manifest (plain directory appends are visible the
     moment files land)."""
     import ringo_spark.engine as engmod
 
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     before = eng.read_table("fact_orders_by_day").count()
 
@@ -288,45 +323,27 @@ def test_manifest_append_crash_leaves_snapshot_unchanged(
 
 
 def test_manifest_append_crash_after_publish_heals_by_window_swap(
-        manifest_engine, monkeypatch):
-    """Crash AFTER the pointer flip but before the watermark lands: the
-    appended window is visible without its watermark.  Window-stamped
-    appends (r12) make the same-window rerun SAFE — the recomputed
-    window atomically replaces the half-committed dir instead of
-    doubling it — so the engine self-heals where it used to refuse.  A
-    rerun whose window does NOT cover the committed append still
-    refuses (the conservative direction is unchanged)."""
-    import datetime as _dt
-
-    eng = manifest_engine
+        engine, monkeypatch):
+    """Crash right AFTER the append's pointer flip: the window's rows and
+    its watermark are both published.  Window-stamped appends make
+    a same-window rerun SAFE — the recomputed window atomically replaces
+    the committed dir instead of doubling it."""
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
 
-    real_store = eng._commit_watermark
-
-    def crashing_store(table, upper):
-        if table == "fact_orders_by_day":
-            raise RuntimeError("simulated crash before watermark")
-        return real_store(table, upper)
-
-    monkeypatch.setattr(eng, "_commit_watermark", crashing_store)
+    _crash_fact_publish(monkeypatch, after=True)
     with pytest.raises(RuntimeError, match="simulated crash"):
         eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
     monkeypatch.undo()
-
-    # a NARROWER window can't prove it covers the committed append
-    with pytest.raises(RuntimeError, match="did not complete"):
-        eng.run(PopulationMode.INCREMENTAL,
-                T_ORDERS_MID + _dt.timedelta(days=1), T_ORDERS_MID)
+    assert eng.watermarks()["fact_orders_by_day"] == T_FAR.isoformat()
 
     # the same-window rerun swaps the window in and completes
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    assert "fact_orders_by_day" not in eng._inflight()
     healed = {tuple(r) for r in
               eng.read_table("fact_orders_by_day").collect()}
 
     # reference: the same two runs on a fresh engine with no crash
-    ref = Engine(eng.spark, ORDERS_ENV, eng.storage + "_ref",
-                 commit_mode="manifest")
+    ref = Engine(eng.spark, ORDERS_ENV, eng.storage + "_ref")
     ref.load_sources("/root/testdata/sf0.001")
     ref.run(PopulationMode.FULL, T_ORDERS_MID)
     ref.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
@@ -335,13 +352,13 @@ def test_manifest_append_crash_after_publish_heals_by_window_swap(
     assert healed == want
 
 
-def test_incremental_rerun_same_window_is_idempotent(manifest_engine):
+def test_incremental_rerun_same_window_is_idempotent(engine):
     """The MERGE contract (r11 VERDICT item 8): re-running an
     already-committed incremental window — late-arriving data, an
     operator retry — REPLACES that window's rows instead of appending
     them again.  The unstamped full-refresh base dir is never touched;
     the replaced dir leaves the live dir list."""
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
     once = sorted(tuple(r) for r in
@@ -360,26 +377,6 @@ def test_incremental_rerun_same_window_is_idempotent(manifest_engine):
     assert m["versions"]["3"] == ["fact_orders_by_day__v1",
                                   "fact_orders_by_day__v3"]
     assert set(m["windows"]) == {"fact_orders_by_day__v3"}
-
-
-def test_rename_mode_same_window_rerun_refuses(engine):
-    """VERDICT r12 item 2: rename mode cannot MERGE a recomputed window
-    (no atomic swap), so a same-window rerun must REFUSE instead of
-    silently appending the rows twice.  A full refresh clears the
-    ledger — every stamped window was just recomputed — after which the
-    same incremental window commits cleanly again."""
-    eng = engine                      # default commit_mode='rename'
-    eng.run(PopulationMode.FULL, T_ORDERS_MID)
-    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    once = eng.read_table("fact_orders_by_day").count()
-
-    with pytest.raises(ValueError, match="double-count"):
-        eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    assert eng.read_table("fact_orders_by_day").count() == once
-
-    eng.run(PopulationMode.FULL, T_ORDERS_MID)   # clears the ledger
-    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    assert eng.read_table("fact_orders_by_day").count() == once
 
 
 def test_iso_normalizes_tz_aware_bounds_to_utc():
@@ -422,7 +419,7 @@ def test_window_covers_semantics():
 
 def test_manifest_time_travel_reads_retained_versions(spark, tmp_path):
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "ttwarehouse"),
-                 commit_mode="manifest", keep_versions=2)
+                 keep_versions=2)
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     n1 = eng.read_table("fact_orders_by_day").count()
@@ -448,8 +445,7 @@ def test_manifest_compaction_folds_snapshot_to_single_dir(spark, tmp_path):
     version, and the superseded dirs are GC'd after the pointer flip."""
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "cwh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "cwh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
@@ -602,8 +598,7 @@ def test_manifest_cas_rejects_interleaved_publish(spark, tmp_path):
     version that has since advanced is rejected, never last-writer-wins."""
     import ringo_spark.engine as engmod
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "cas"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "cas"))
     eng._write_full(spark.range(5), "t")
     m = eng._read_manifest("t")
     assert m["version"] == 1
@@ -619,8 +614,8 @@ def test_manifest_two_interleaved_appenders_lose_nothing(spark, tmp_path):
     the CAS retry A's first publish loses, re-reads, and re-publishes a
     snapshot containing BOTH appends; the final table holds every row."""
     store = str(tmp_path / "mw")
-    A = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
-    B = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
+    A = Engine(spark, ORDERS_ENV, store)
+    B = Engine(spark, ORDERS_ENV, store)
     A._write_full(spark.range(0, 10), "t")        # v1: ids 0..9
     stale = A._read_manifest("t")
 
@@ -644,8 +639,7 @@ def test_manifest_two_interleaved_appenders_lose_nothing(spark, tmp_path):
     assert len(m["versions"][str(m["version"])]) == 3
     # lock file persists by design (flock; never unlinked) but must be
     # free — a fresh acquire succeeds immediately
-    fd, tok = A._acquire_manifest_lock("t")
-    A._release_manifest_lock("t", fd, tok)
+    os.close(A._acquire_manifest_lock("t"))
 
 
 def test_manifest_lock_crash_timeout_and_replace(spark, tmp_path):
@@ -656,16 +650,14 @@ def test_manifest_lock_crash_timeout_and_replace(spark, tmp_path):
     replaced lock file is detected by the inode re-check."""
     import fcntl
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lk"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lk"))
     os.makedirs(eng.storage, exist_ok=True)
     lock = eng._lock_path("t")
 
     # crashed writer: file exists, no flock held -> immediate acquire
     with open(lock, "w") as fh:
         fh.write("")
-    fd, token = eng._acquire_manifest_lock("t")
-    eng._release_manifest_lock("t", fd, token)
+    os.close(eng._acquire_manifest_lock("t"))
 
     # live writer: flock held on a separate fd -> waiter times out
     holder = os.open(lock, os.O_CREAT | os.O_RDWR)
@@ -679,7 +671,7 @@ def test_manifest_lock_crash_timeout_and_replace(spark, tmp_path):
         Engine._LOCK_WAIT_SECS = orig_wait
     # ...and a close releases it for the next acquirer
     os.close(holder)
-    fd, token = eng._acquire_manifest_lock("t")
+    fd = eng._acquire_manifest_lock("t")
     # external unlink+recreate while held: a second acquirer locks the
     # NEW inode without deadlocking (the inode re-check reopens).  NB
     # what this asserts (ADVICE r09): fd2 acquires IMMEDIATELY while fd
@@ -690,9 +682,8 @@ def test_manifest_lock_crash_timeout_and_replace(spark, tmp_path):
     os.unlink(lock)
     with open(lock, "w") as fh:
         fh.write("")
-    fd2, token2 = eng._acquire_manifest_lock("t")   # old lock's inode gone
-    eng._release_manifest_lock("t", fd2, token2)
-    eng._release_manifest_lock("t", fd, token)
+    os.close(eng._acquire_manifest_lock("t"))   # old lock's inode gone
+    os.close(fd)
 
 
 def test_manifest_lock_error_paths_are_bounded(spark, tmp_path, monkeypatch):
@@ -703,8 +694,7 @@ def test_manifest_lock_error_paths_are_bounded(spark, tmp_path, monkeypatch):
     cannot make acquisition spin forever."""
     import errno
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lkerr"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lkerr"))
     os.makedirs(eng.storage, exist_ok=True)
 
     # (a) genuine error: raise ENOLCK from flock — must propagate as
@@ -748,14 +738,14 @@ def test_manifest_concurrent_append_stress(spark, tmp_path):
     import threading
 
     store = str(tmp_path / "stress")
-    eng = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, store)
     eng._write_full(spark.range(0, 10), "t")          # v1: ids 0..9
 
     N_PER_WRITER = 4
     errs = []
 
     def writer(base):
-        w = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
+        w = Engine(spark, ORDERS_ENV, store)
         try:
             for i in range(N_PER_WRITER):
                 lo = base + i * 10
@@ -780,8 +770,7 @@ def test_manifest_concurrent_append_stress(spark, tmp_path):
     assert m["version"] == 1 + 2 * N_PER_WRITER
     assert len(m["versions"][str(m["version"])]) == 1 + 2 * N_PER_WRITER
     # lock must be free after the storm (file persists by flock design)
-    fd, tok = eng._acquire_manifest_lock("t")
-    eng._release_manifest_lock("t", fd, tok)
+    os.close(eng._acquire_manifest_lock("t"))
 
 
 def test_gc_never_deletes_higher_version_dirs(spark, tmp_path):
@@ -790,8 +779,7 @@ def test_gc_never_deletes_higher_version_dirs(spark, tmp_path):
     this writer's publish belongs to a concurrent writer that published
     meanwhile — it must survive.  Unreferenced dirs at or below the
     published version are true orphans and go."""
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "gcv"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "gcv"))
     eng._write_full(spark.range(5), "t")               # publishes v1
     # fake a crash orphan at v1-era naming and a concurrent writer's v2
     os.makedirs(os.path.join(eng.storage, "t__v0"))    # stale orphan
@@ -816,7 +804,7 @@ def test_manifest_schema_evolution_on_append(spark, tmp_path):
     from pyspark.sql import functions as F
 
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "evo"),
-                 commit_mode="manifest", keep_versions=2)
+                 keep_versions=2)
     os.makedirs(eng.storage, exist_ok=True)
 
     eng._write_full(spark.range(0, 5).select(F.col("id")), "t")
@@ -849,7 +837,7 @@ def test_manifest_schema_drop_requires_full_refresh(spark, tmp_path):
     from pyspark.sql import functions as F
 
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "drop"),
-                 commit_mode="manifest", keep_versions=3)
+                 keep_versions=3)
     os.makedirs(eng.storage, exist_ok=True)
 
     eng._write_full(
@@ -887,7 +875,7 @@ def test_append_onto_pre_schema_manifest_infers_prev_schema(spark, tmp_path):
     from pyspark.sql import functions as F
 
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "pre"),
-                 commit_mode="manifest", keep_versions=2)
+                 keep_versions=2)
     os.makedirs(eng.storage, exist_ok=True)
     # legacy snapshot spanning TWO dirs with heterogeneous file schemas
     # (a wide refresh + a narrow append) — the fallback must footer-
@@ -920,8 +908,7 @@ def test_read_table_reads_manifest_exactly_once(spark, tmp_path):
     manifest read per read_table call."""
     from pyspark.sql import functions as F
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "once"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "once"))
     os.makedirs(eng.storage, exist_ok=True)
     eng._write_full(spark.range(0, 3).select("id"), "t")
 
@@ -970,8 +957,7 @@ def test_window_merge_model_based(spark, tmp_path):
     def run(ops):
         counter[0] += 1
         eng = Engine(spark, ORDERS_ENV,
-                     str(tmp_path / f"wmb{counter[0]}"),
-                     commit_mode="manifest")
+                     str(tmp_path / f"wmb{counter[0]}"))
         model = {}   # payload id -> window (or None) of surviving dirs
         for step, op in enumerate(ops):
             df = spark.range(step * 100, step * 100 + 3) \
@@ -1002,42 +988,39 @@ def test_window_merge_model_based(spark, tmp_path):
 
 def test_compaction_preserves_same_window_rerun_protection(spark, tmp_path):
     """r16 review finding 1: compaction merges the windowed dirs' rows,
-    so the same-window rerun protection must SURVIVE it.  Manifest
-    mode: the absorbed windows become refuse-keys (their dirs no longer
-    exist to swap, so an overlapping append would silently double-count
-    the merged rows); rename mode: the ledger is preserved.  A true
-    full refresh still clears both."""
+    so the same-window rerun protection must SURVIVE it: the absorbed
+    windows become refuse-keys (their dirs no longer exist to swap, so
+    an overlapping append would silently double-count the merged rows).
+    A true full refresh still clears them."""
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
-    for mode in ("manifest", "rename"):
-        eng = Engine(spark, EVENTS_ENV, str(tmp_path / f"wh_{mode}"),
-                     commit_mode=mode)
-        eng.load_sources("/root/testdata/sf0.001")
-        eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
+    eng.load_sources("/root/testdata/sf0.001")
+    eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
+    table = "fact_events_by_minute"
+    total = eng.read_table(table).agg(
+        {"event_count": "sum"}).collect()[0][0]
+
+    eng.compact_fact(EVENTS_FACT)
+    # compaction carries the watermark forward with the merged rows
+    assert eng.watermarks()[table] == T_FAR.isoformat()
+    # rerun of the absorbed window must refuse, not double-count
+    with pytest.raises(ValueError, match="compaction"):
         eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-        table = "fact_events_by_minute"
-        total = eng.read_table(table).agg(
-            {"event_count": "sum"}).collect()[0][0]
+    assert eng.read_table(table).agg(
+        {"event_count": "sum"}).collect()[0][0] == total
 
-        eng.compact_fact(EVENTS_FACT)
-        # rerun of the absorbed window must refuse, not double-count
-        with pytest.raises(ValueError,
-                           match="compaction" if mode == "manifest"
-                                 else "double-count"):
-            eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-        assert eng.read_table(table).agg(
-            {"event_count": "sum"}).collect()[0][0] == total
-
-        # protection survives a further compaction too
-        eng.compact_fact(EVENTS_FACT)
-        with pytest.raises(ValueError):
-            eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-
-        # a true full refresh recomputes everything and clears the keys
-        eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    # protection survives a further compaction too
+    eng.compact_fact(EVENTS_FACT)
+    with pytest.raises(ValueError):
         eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-        assert eng.read_table(table).agg(
-            {"event_count": "sum"}).collect()[0][0] == total
+
+    # a true full refresh recomputes everything and clears the keys
+    eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
+    assert eng.read_table(table).agg(
+        {"event_count": "sum"}).collect()[0][0] == total
 
 
 def test_direct_run_fact_repopulates_dimensions(spark, tmp_path):
@@ -1076,43 +1059,54 @@ def test_direct_run_fact_repopulates_dimensions(spark, tmp_path):
     assert fact.where(F.col("event_type_id") == -1).count() == 0
 
 
-def test_sidecar_state_writes_are_atomic(spark, tmp_path, monkeypatch):
-    """r16 review finding 3/4: watermark / inflight / window-ledger
-    rewrites go through tmp + os.replace — a crash mid-write leaves the
-    PREVIOUS state readable, never torn JSON; and the post-append
-    watermark+inflight-clear commit is ONE write, so no crash window
-    exists between them."""
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "wh"))
-    eng.load_sources("/root/testdata/sf0.001")
+def test_manifest_torn_write_leaves_previous_snapshot(engine, monkeypatch):
+    """The manifest is the warehouse's only state, and it is rewritten
+    through tmp + os.replace: a crash mid-write leaves the PREVIOUS
+    manifest readable — its data, its watermark — never torn JSON."""
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
-    before = json.load(open(eng._wm_path))
+    mp = eng._manifest_path("fact_orders_by_day")
+    before = json.load(open(mp))
+    rows = eng.read_table("fact_orders_by_day").count()
 
     real_dump = json.dump
 
     def torn_dump(obj, fh, **kw):
+        if not fh.name.startswith(mp):
+            return real_dump(obj, fh, **kw)
         fh.write('{"torn":')     # partial bytes, then die
         raise RuntimeError("simulated crash mid-write")
 
     monkeypatch.setattr(json, "dump", torn_dump)
     with pytest.raises(RuntimeError, match="mid-write"):
-        eng._store_watermark("fact_orders_by_day", T_FAR)
-    monkeypatch.setattr(json, "dump", real_dump)
+        eng.run_fact(ORDERS_ENV.find_fact("orders"),
+                     PopulationMode.INCREMENTAL, T_FAR)
+    monkeypatch.undo()
     # the live file still parses and holds the previous state
-    assert json.load(open(eng._wm_path)) == before
+    assert json.load(open(mp)) == before
+    assert eng.read_table("fact_orders_by_day").count() == rows
+    assert eng.watermarks()["fact_orders_by_day"] == T_ORDERS_MID.isoformat()
 
-    # the append-success commit is a single atomic write
-    writes = []
-    real_atomic = eng._atomic_json
-    monkeypatch.setattr(
-        Engine, "_atomic_json",
-        staticmethod(lambda path, obj: (writes.append(path),
-                                        real_atomic(path, obj))[1]))
-    eng._mark_inflight("fact_orders_by_day")
-    writes.clear()
-    eng._commit_watermark("fact_orders_by_day", T_FAR)
-    assert len(writes) == 1
-    assert "fact_orders_by_day" not in eng._inflight()
-    assert eng.watermarks()["fact_orders_by_day"] == T_FAR.isoformat()
+
+def test_engine_rejects_rename_era_warehouse(spark, tmp_path, engine):
+    """A warehouse written by the retired rename protocol keeps its state
+    in warehouse-wide sidecar files and its tables as plain directories.
+    Opening one must fail with a named error, not write new versions
+    beside the old tables and resume from no watermark."""
+    from ringo_spark.engine import LegacyWarehouseError
+
+    for sidecar in ("_watermarks.json", "_rename_windows.json",
+                    "_batch_tags.json"):
+        wh = tmp_path / sidecar.strip("_.")
+        wh.mkdir()
+        (wh / sidecar).write_text("{}")
+        with pytest.raises(LegacyWarehouseError, match="new storage path"):
+            Engine(spark, ORDERS_ENV, str(wh))
+    # a manifest-era warehouse opens, and its runs write no sidecar
+    engine.run(PopulationMode.FULL, T_ORDERS_MID)
+    Engine(spark, ORDERS_ENV, engine.storage)
+    assert not {"_watermarks.json", "_rename_windows.json",
+                "_batch_tags.json"} & set(os.listdir(engine.storage))
 
 
 def test_refused_append_cleans_its_stage(spark, tmp_path):
@@ -1123,8 +1117,7 @@ def test_refused_append_cleans_its_stage(spark, tmp_path):
     unpromoted stages until some later successful publish)."""
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
@@ -1145,13 +1138,11 @@ def test_compaction_aborts_when_manifest_advances(spark, tmp_path):
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
     table = "fact_events_by_minute"
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
 
-    other = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                   commit_mode="manifest")
+    other = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     other.load_sources("/root/testdata/sf0.001")
 
     real = Engine._write_stage
@@ -1193,8 +1184,7 @@ def test_compaction_aborts_when_manifest_vanishes(spark, tmp_path):
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
     table = "fact_events_by_minute"
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
 

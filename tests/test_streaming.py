@@ -115,7 +115,7 @@ def test_streaming_exact_dedup_drops_replays_and_expires_state(spark, tmp_path):
 
 
 def test_streaming_pipeline_with_manifest_commits(spark, tmp_path):
-    """StreamingPipeline over a manifest-mode engine: each micro-batch's
+    """StreamingPipeline over the manifest commits: each micro-batch's
     append publishes atomically (one new version dir + pointer flip), so
     readers between micro-batches always see a complete snapshot — the
     exactly-once table-maintenance story end-to-end on object-store-safe
@@ -140,8 +140,7 @@ def test_streaming_pipeline_with_manifest_commits(spark, tmp_path):
     third2.coalesce(1).write.mode("append").parquet(src)
     third3.coalesce(1).write.mode("append").parquet(src)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     stream = (spark.readStream.schema(_events_schema(spark))
@@ -160,8 +159,10 @@ def test_streaming_pipeline_with_manifest_commits(spark, tmp_path):
     assert m.get("windows", {}) == {}
     assert eng.read_table(fact_table).agg(
         F.sum("event_count")).collect()[0][0] == n
-    # no inflight leftovers: every append's watermark landed
-    assert eng._inflight() == {}
+    # every batch's tag rode its own publish; unbounded micro-batches
+    # publish no watermark
+    assert len(m["batch_tags"]) == 3
+    assert "watermark" not in m
 
 
 def test_streaming_pit_enrich_matches_batch(spark, tmp_path):
@@ -395,8 +396,7 @@ def test_streaming_append_crash_between_write_and_pointer_flip(
     half.coalesce(1).write.parquet(src)
     cat["events"].subtract(half).coalesce(1).write.mode("append").parquet(src)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     fact_table = "fact_events_by_minute"
 
@@ -436,9 +436,9 @@ def test_streaming_append_crash_between_write_and_pointer_flip(
     assert batch1 == n // 2
     # the orphan version dir exists but is unreferenced
     assert _os.path.isdir(_os.path.join(eng.storage, f"{fact_table}__v2"))
-    # inflight journal recorded the pre-append version -> provably safe
-    assert eng._inflight()[fact_table] == 1
-    assert eng._inflight_retry_is_safe(fact_table)
+    # the crashed batch's tag never published either -> the replay is
+    # provably not a duplicate, and the retry appends it
+    assert len(m["batch_tags"]) == 1
 
     # recovery: same checkpoint, crash removed -> the failed micro-batch
     # replays, reclaims its orphan dir, flips the pointer
@@ -451,7 +451,7 @@ def test_streaming_append_crash_between_write_and_pointer_flip(
     assert m["version"] == 2
     assert eng.read_table(fact_table).agg(
         F.sum("event_count")).collect()[0][0] == n
-    assert eng._inflight() == {}
+    assert len(m["batch_tags"]) == 2
 
 
 def test_streaming_funnel_matches_batch(spark, tmp_path):
@@ -1613,8 +1613,7 @@ def test_pipeline_batch_replay_is_exactly_once(spark, tmp_path):
     b1 = cat["events"].limit(n // 2)
     b2 = cat["events"].subtract(b1)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     table = "fact_events_by_minute"
@@ -1645,52 +1644,12 @@ def test_pipeline_batch_replay_is_exactly_once(spark, tmp_path):
         F.sum("event_count")).collect()[0][0] == n
 
 
-def test_pipeline_retry_after_lost_watermark_commit(spark, tmp_path):
-    """r18 review, the torn arm: a crash BETWEEN the append's manifest
-    publish and the watermark commit used to brick the next run (the
-    inflight journal refused: version advanced, no window to swap).
-    With the batch tag recorded atomically with the publish, the retry
-    is provably safe — the append no-op-skips and the watermark commit
-    heals the inflight marker."""
-    cat = load_catalog(spark, SF, [EVENTS])
-    n = cat["events"].count()
-    b1 = cat["events"].limit(n // 2)
-    b2 = cat["events"].subtract(b1)
-
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
-    eng.load_sources(SF)
-    pipe = StreamingPipeline(eng, EVENTS_FACT)
-    table = "fact_events_by_minute"
-    pipe.process_batch(b1, 0)
-
-    real = Engine._commit_watermark
-    boom = []
-
-    def crash_once(self, tbl, upper):
-        if not boom:
-            boom.append(True)
-            raise RuntimeError("injected crash before watermark commit")
-        return real(self, tbl, upper)
-
-    Engine._commit_watermark = crash_once
-    try:
-        with pytest.raises(RuntimeError, match="injected"):
-            pipe.process_batch(b2, 1)          # append published, then crash
-        assert table in eng._inflight()        # torn marker left behind
-        pipe.process_batch(b2, 1)              # retry: skip + heal
-    finally:
-        Engine._commit_watermark = real
-    assert eng._inflight() == {}
-    assert eng.read_table(table).agg(
-        F.sum("event_count")).collect()[0][0] == n
-
-
 def test_pipeline_replay_is_noop_in_rename_mode(spark, tmp_path):
-    """Rename-mode twin: batch tags live in the _batch_tags.json sidecar
-    (no manifest to ride), stamped after the files land — a committed
-    batch's replay is skipped, and a true full refresh clears the
-    table's tags with its windows."""
+    """The replay check of the retired rename commit, kept on the
+    manifest path that replaced it: batch tags ride the manifest
+    publish, a committed batch's replay is skipped, and a true full
+    refresh clears the table's tags."""
+    import json as _json
     cat = load_catalog(spark, SF, [EVENTS])
     n = cat["events"].count()
     b1 = cat["events"].limit(n // 2)
@@ -1704,72 +1663,106 @@ def test_pipeline_replay_is_noop_in_rename_mode(spark, tmp_path):
     pipe.process_batch(b2, 1)
     assert eng.read_table(table).agg(
         F.sum("event_count")).collect()[0][0] == n
-    pipe.process_batch(b1, 0)                  # replay: sidecar-skipped
+    pipe.process_batch(b1, 0)                  # replay: tag-skipped
     pipe.process_batch(b2, 7)
     assert eng.read_table(table).agg(
         F.sum("event_count")).collect()[0][0] == n
-    assert len(eng._recorded_tags(table)) == 2
+    m = _json.load(open(eng._manifest_path(table)))
+    assert len(m["batch_tags"]) == 2
     # a true full refresh recomputes everything -> tags cleared
     eng.sources["events"] = cat["events"]
     eng.run(PopulationMode.FULL, T_FAR)
-    assert eng._recorded_tags(table) == []
+    assert "batch_tags" not in _json.load(open(eng._manifest_path(table)))
 
 
-def test_pipeline_first_batch_crash_before_tag_is_bracketed(spark, tmp_path):
-    """ADVICE r18: the rename-mode FIRST micro-batch lands as a full
-    write whose batch tag is stamped only after the live rename — a
-    crash in between left committed data with no tag and no marker, so
-    a foreachBatch replay took the append path untagged and silently
-    double-counted.  The tagged full write is now inflight-bracketed:
-    the crash leaves the marker, the replay refuses loudly (tag absent,
-    opaque rename marker), and a crash that DID reach the stamp heals
-    on replay exactly like the bracketed append path."""
+def test_pipeline_retry_after_lost_watermark_commit(
+        spark, tmp_path, monkeypatch):
+    """The torn arm: a crash between the append's publish and
+    a separate watermark commit used to leave the batch committed with a
+    stale inflight marker.  The publish now carries the batch tag itself,
+    so a crash right after the pointer flip leaves a fully committed
+    batch: the retry no-op-skips and nothing doubles."""
+    import ringo_spark.engine as engmod
+
     cat = load_catalog(spark, SF, [EVENTS])
     n = cat["events"].count()
     b1 = cat["events"].limit(n // 2)
+    b2 = cat["events"].subtract(b1)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))   # rename mode
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     table = "fact_events_by_minute"
+    pipe.process_batch(b1, 0)
 
-    real = Engine._stamp_batch_tag
-    boom = []
+    real_replace = os.replace
 
-    def crash_once(self, tbl, tag):
-        if not boom:
-            boom.append(True)
-            raise RuntimeError("injected crash before tag stamp")
-        return real(self, tbl, tag)
+    def crash_after_flip(src, dst):
+        real_replace(src, dst)
+        if dst.endswith(table + ".manifest.json"):
+            raise RuntimeError("injected crash after the pointer flip")
 
-    Engine._stamp_batch_tag = crash_once
-    try:
+    monkeypatch.setattr(engmod.os, "replace", crash_after_flip)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.process_batch(b2, 1)              # append published, then crash
+    monkeypatch.undo()
+    m = eng._read_manifest(table)
+    assert len(m["batch_tags"]) == 2           # the tag rode the publish
+    pipe.process_batch(b2, 1)                  # retry: skip
+    assert eng._read_manifest(table)["version"] == m["version"]
+    assert eng.read_table(table).agg(
+        F.sum("event_count")).collect()[0][0] == n
+
+
+def test_pipeline_first_batch_crash_before_tag_is_bracketed(
+        spark, tmp_path, monkeypatch):
+    """A pipeline's FIRST micro-batch lands as a full write.
+    Its tag rides the same manifest flip as its data, so no crash point
+    leaves the data visible without the tag: a crash at the promote
+    rename or just before the flip leaves no table (the replay writes
+    it), a crash just after the flip leaves it tagged (the replay is a
+    no-op).  Either way the replay ends at exactly one copy."""
+    import ringo_spark.engine as engmod
+
+    cat = load_catalog(spark, SF, [EVENTS])
+    n = cat["events"].count()
+    b1 = cat["events"].limit(n // 2)
+    table = "fact_events_by_minute"
+    real_rename, real_replace = os.rename, os.replace
+
+    def crash_at_promote(src, dst):
+        if f"{table}__stage_" in src:
+            raise RuntimeError("injected crash at the promote rename")
+        return real_rename(src, dst)
+
+    def crash_before_flip(src, dst):
+        if dst.endswith(table + ".manifest.json"):
+            raise RuntimeError("injected crash before the pointer flip")
+        return real_replace(src, dst)
+
+    def crash_after_flip(src, dst):
+        real_replace(src, dst)
+        if dst.endswith(table + ".manifest.json"):
+            raise RuntimeError("injected crash after the pointer flip")
+
+    visible = []
+    for i, (name, crash) in enumerate((("rename", crash_at_promote),
+                                       ("replace", crash_before_flip),
+                                       ("replace", crash_after_flip))):
+        eng = Engine(spark, EVENTS_ENV, str(tmp_path / f"wh{i}"))
+        eng.load_sources(SF)
+        pipe = StreamingPipeline(eng, EVENTS_FACT)
+        monkeypatch.setattr(engmod.os, name, crash)
         with pytest.raises(RuntimeError, match="injected"):
-            pipe.process_batch(b1, 0)          # full write, then crash
-        # data is live (rename completed) but untagged — the bracket
-        # must have left the marker so the replay cannot double-count
-        assert eng.table_exists(table)
-        assert eng._recorded_tags(table) == []
-        assert table in eng._inflight()
-        with pytest.raises(RuntimeError, match="did not complete"):
-            pipe.process_batch(b1, 0)          # replay refused loudly
+            pipe.process_batch(b1, 0)
+        monkeypatch.undo()
+        m = eng._read_manifest(table)
+        visible.append(m is not None)
+        assert m is None or len(m.get("batch_tags", [])) == 1
+        pipe.process_batch(b1, 0)              # replay
         assert eng.read_table(table).agg(
-            F.sum("event_count")).collect()[0][0] == n // 2   # no double
-    finally:
-        Engine._stamp_batch_tag = real
-
-    # the other crash window — between the stamp and the bracket clear:
-    # replay is provably safe (tag recorded), no-op-skips, heals marker
-    eng2 = Engine(spark, EVENTS_ENV, str(tmp_path / "wh2"))
-    eng2.load_sources(SF)
-    pipe2 = StreamingPipeline(eng2, EVENTS_FACT)
-    pipe2.process_batch(b1, 0)
-    assert len(eng2._recorded_tags(table)) == 1
-    eng2._mark_inflight(table)                 # simulate crash pre-clear
-    pipe2.process_batch(b1, 0)                 # replay: skip + heal
-    assert eng2._inflight() == {}
-    assert eng2.read_table(table).agg(
-        F.sum("event_count")).collect()[0][0] == n // 2
+            F.sum("event_count")).collect()[0][0] == n // 2
+    assert visible == [False, False, True]
 
 
 def test_batch_tag_ledger_retention_bound(spark, tmp_path):
@@ -1778,11 +1771,16 @@ def test_batch_tag_ledger_retention_bound(spark, tmp_path):
     now keeps the newest BATCH_TAG_RETENTION tags; replay protection
     therefore covers the last N batches (foreachBatch retries and
     recent lineage resets), and an older tag ages out FIFO."""
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))   # rename mode
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     assert Engine.BATCH_TAG_RETENTION >= 1024   # real bound is generous
     eng.BATCH_TAG_RETENTION = 3                 # instance-scoped shrink
-    for i in range(5):
-        eng._stamp_batch_tag("t", f"tag{i}")
-    assert eng._recorded_tags("t") == ["tag2", "tag3", "tag4"]
-    # _bound_tags is what both manifest publish arms apply
-    assert eng._bound_tags([f"x{i}" for i in range(7)]) == ["x4", "x5", "x6"]
+    eng._write_full(spark.range(1), "t", batch_tag="tag0")
+    for i in range(1, 5):
+        eng._write_append(spark.range(1), "t", batch_tag=f"tag{i}")
+    assert eng._read_manifest("t")["batch_tags"] == ["tag2", "tag3", "tag4"]
+    # a retained tag still makes its replay a no-op; an aged-out one
+    # no longer protects
+    eng._write_append(spark.range(1), "t", batch_tag="tag4")
+    assert eng.read_table("t").count() == 5
+    eng._write_append(spark.range(1), "t", batch_tag="tag0")
+    assert eng.read_table("t").count() == 6
