@@ -12,8 +12,13 @@ same artifacts for orchestration parity:
 
 Execution model (Spark-first):
 
-- Dimensions first (topo order), then facts; a fact re-reads its persisted
-  dimensions so surrogate keys are consistent across facts sharing a dim.
+- A refresh follows the dependency DAG of ``dependencies.json`` in two
+  waves: every derived dimension depends only on sources, and every fact
+  only on sources and dimensions, never on another fact.  The dimension wave
+  builds each dimension once, side by side; the fact wave then builds the
+  facts side by side, each re-reading its persisted dimensions so
+  surrogate keys are consistent across facts sharing a dim.  Every
+  table's Spark jobs carry the job tag ``ringo-table:<table>``.
 - Every write lands in an immutable ``<table>__vN`` directory and becomes
   visible when the table's manifest (``<table>.manifest.json``) is
   replaced atomically — the reference's ``{{suff}}`` staging-table swap
@@ -38,15 +43,17 @@ import logging
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import cast_to_declared
 from .extractor import (
     extract_dependencies, extract_dimension_tables, extract_fact_table,
-    topo_order,
 )
 from .generator import sqlgen
 from .model import DimTime, Env, Fact, PopulationMode, TenantId
@@ -106,10 +113,6 @@ class Engine:
         # (populate/fact.py docstring; shape in functions/skew.py)
         self.salt_tenant_buckets = salt_tenant_buckets
         self.sources: dict[str, DataFrame] = {}
-        # dimension-population memo: spans the facts of one run() batch
-        # (see run_fact)
-        self._batch_dim_memo = False
-        self._populated_this_run: set[str] = set()
         os.makedirs(storage_path, exist_ok=True)
 
     # --- sources -----------------------------------------------------------
@@ -1014,33 +1017,89 @@ class Engine:
         append a no-op, so foreachBatch retries and checkpoint-lineage
         replays are exactly-once (see :meth:`_write_append`).  Dimension
         appends need no tag — their anti-join is replay-idempotent."""
-        # a DIRECT run_fact call repopulates dimensions: the memo only
-        # persists across the facts of one run() batch (r16 review — a
-        # long-lived Engine's second incremental run_fact previously
-        # skipped dimension population and misattributed new members to
-        # the missing-FK sentinel)
-        if not self._batch_dim_memo:
-            self._populated_this_run = set()
+        return self._run_facts([fact], mode, time_upper, time_lower,
+                               resume, batch_tag)[0]
+
+    def _run_facts(self, facts: list[Fact], mode: PopulationMode, upper,
+                   lower, resume: bool, batch_tag: str | None = None
+                   ) -> list[str]:
+        """Build ``facts`` and every derived dimension they need: a
+        dimension wave, then a fact wave (the DAG of ``dependencies.json``:
+        a dimension reads only sources, a fact reads sources and
+        dimensions, never another fact).  Each dimension is built once,
+        by the first fact in declaration order that needs it, with that
+        fact's resolved window.  Returns the fact table names."""
         from .extractor import extract_all_dimension_tables
 
-        if resume and mode == PopulationMode.INCREMENTAL and time_lower is None:
+        lowers = [self._resume_lower(f, mode, lower, resume) for f in facts]
+        dims: dict[str, tuple] = {}
+        for fact, lo in zip(facts, lowers):
+            for dim_fact, dim_table in extract_all_dimension_tables(self.env,
+                                                                    fact):
+                # a pre-existing (DimId) table is not ours to build
+                if self.env.find_table(dim_table.name) is None:
+                    dims.setdefault(dim_table.name, (dim_fact, lo))
+        self._run_wave([
+            (name, partial(self._run_dimension, f, name, mode, upper, lo))
+            for name, (f, lo) in dims.items()])
+        return self._run_wave([
+            (extract_fact_table(self.env, f).name,
+             partial(self._run_fact_table, f, mode, upper, lo,
+                     batch_tag=batch_tag))
+            for f, lo in zip(facts, lowers)])
+
+    def _resume_lower(self, fact: Fact, mode: PopulationMode, lower,
+                      resume: bool):
+        """The fact's window lower bound: ``lower`` as given, or for an
+        incremental resume with none given, the watermark its manifest
+        published with the previous run's rows."""
+        if resume and mode == PopulationMode.INCREMENTAL and lower is None:
             m = self._read_manifest(extract_fact_table(self.env, fact).name)
             stored = m.get("watermark") if m else None
             if stored is not None:
                 import datetime as _dt
 
-                time_lower = _dt.datetime.fromisoformat(stored)
+                return _dt.datetime.fromisoformat(stored)
+        return lower
 
-        for dim_fact, dim_table in extract_all_dimension_tables(self.env, fact):
-            if self.env.find_table(dim_table.name) is not None:
-                continue  # pre-existing (DimId) table, not ours to build
-            if dim_table.name in self._populated_this_run:
-                continue
-            self._run_dimension(dim_fact, dim_table.name, mode,
-                                time_upper, time_lower)
-            self._populated_this_run.add(dim_table.name)
-        return self._run_fact_table(fact, mode, time_upper, time_lower,
-                                    batch_tag=batch_tag)
+    def _run_wave(self, tasks: list[tuple]) -> list:
+        """Run independent ``(table, build)`` tasks side by side and return
+        their results in order.  Most of a refresh's stages are one-task
+        stages, so overlapping tables fills executor slots that per-job
+        scheduling would leave idle.  Each task inherits the caller's
+        local properties (job group, job tags, scheduler pool) and tags
+        its own jobs ``ringo-table:<table>``.  The wave waits for every
+        task before it re-raises the first error in task order, so no
+        write is in flight once it returns or raises."""
+        if not tasks:
+            return []
+        sc = self.spark.sparkContext
+
+        def tagged(table, build):
+            tag = f"ringo-table:{table}"
+
+            def body():
+                sc.addJobTag(tag)
+                try:
+                    return build()
+                finally:
+                    # pool threads are reused: a leftover tag would
+                    # mislabel the next table's jobs
+                    sc.removeJobTag(tag)
+            # wrapped per task, in the calling thread: each task gets its
+            # own copy of the caller's local properties
+            return inheritable_thread_target(self.spark)(body)
+
+        workers = min(len(tasks), sc.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = [pool.submit(tagged(t, b)) for t, b in tasks]
+        failed = [(t, f.exception()) for (t, _), f in zip(tasks, futures)
+                  if f.exception() is not None]
+        for table, e in failed[1:]:
+            log.warning("%s also failed in the same wave: %r", table, e)
+        if failed:
+            raise failed[0][1]
+        return [f.result() for f in futures]
 
     def _run_dimension(self, fact: Fact, dim_table: str, mode: PopulationMode,
                        time_upper, time_lower) -> None:
@@ -1097,23 +1156,10 @@ class Engine:
 
     def run(self, mode: PopulationMode = PopulationMode.FULL, time_upper=None,
             time_lower=None) -> list[str]:
-        """Populate every persistent fact (and all dimensions) in topo order."""
-        # one dim-population memo across THIS batch's facts (facts
-        # sharing a dim build it once); direct run_fact calls outside a
-        # batch reset it per call — see run_fact
-        self._populated_this_run = set()
-        self._batch_dim_memo = True
-        try:
-            return self._run_batch(mode, time_upper, time_lower)
-        finally:
-            self._batch_dim_memo = False
-
-    def _run_batch(self, mode, time_upper, time_lower) -> list[str]:
-        out = []
-        for fact in self.env.facts:
-            if fact.persistent:
-                out.append(self.run_fact(fact, mode, time_upper, time_lower))
-        return out
+        """Populate every persistent fact and the dimensions they need:
+        the dimension wave, then the fact wave (see :meth:`_run_facts`)."""
+        return self._run_facts([f for f in self.env.facts if f.persistent],
+                               mode, time_upper, time_lower, resume=True)
 
     def compact_fact(self, fact: Fact) -> None:
         """Re-aggregate the persisted fact table to one row per grain key.

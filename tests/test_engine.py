@@ -203,6 +203,92 @@ def test_resume_after_crash_after_append_publish_doubles_nothing(
     assert df.count() == df.select(*keys).distinct().count()
 
 
+ORDERS_DIMS = ("dim_order_status", "dim_order_priority", "dim_line_status")
+ORDERS_FACTS = ("fact_orders_by_day", "fact_lineitem_by_day")
+
+
+def _dim_rows(eng) -> dict:
+    """Every derived dimension's (id, natural key) rows, order-insensitive."""
+    return {t: sorted(map(tuple, eng.read_table(t).collect()), key=repr)
+            for t in ORDERS_DIMS}
+
+
+def test_run_tags_every_job_with_its_table_under_the_callers_group(engine):
+    """Each wave task tags its jobs ``ringo-table:<table>`` and inherits
+    the caller's job group: across FULL and INCREMENTAL, every job of the
+    caller's group carries exactly one of the five table tags."""
+    import uuid
+
+    sc = engine.spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+    group = f"ringo-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "tagged refresh")
+    try:
+        engine.run(PopulationMode.FULL, T_ORDERS_MID)
+        engine.run(PopulationMode.INCREMENTAL, T_FAR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+
+    in_group = set(tracker.getJobIdsForGroup(group))
+    assert in_group
+    tagged = {t: set(tracker.getJobIdsForTag(f"ringo-table:{t}")) & in_group
+              for t in ORDERS_DIMS + ORDERS_FACTS}
+    assert all(tagged.values()), tagged
+    for job in in_group:
+        owners = [t for t, ids in tagged.items() if job in ids]
+        assert len(owners) == 1, (job, owners)
+    assert set().union(*tagged.values()) == in_group
+
+
+def test_failed_dimension_wave_starts_no_fact(engine, monkeypatch):
+    """A dimension whose publish crashes fails the dimension wave: run
+    raises it only after the wave's other writes finished, the fact wave
+    never starts, and a plain rerun ends where an uncrashed run does."""
+    import ringo_spark.engine as engmod
+
+    real_replace = os.replace
+
+    def crashing_replace(src, dst):
+        if dst.endswith("dim_order_status.manifest.json"):
+            raise RuntimeError("simulated crash at the dimension publish")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(engmod.os, "replace", crashing_replace)
+    with pytest.raises(RuntimeError, match="dimension publish"):
+        engine.run(PopulationMode.FULL, T_FAR)
+    monkeypatch.undo()
+
+    assert not any(engine.table_exists(t) for t in ORDERS_FACTS)
+    assert not [d for d in os.listdir(engine.storage) if "__stage_" in d]
+    engine.run(PopulationMode.FULL, T_FAR)
+
+    twin = Engine(engine.spark, ORDERS_ENV, engine.storage + "_twin")
+    twin.sources = dict(engine.sources)
+    twin.run(PopulationMode.FULL, T_FAR)
+    assert _dim_rows(engine) == _dim_rows(twin)
+    assert _fact_rows(engine) == _fact_rows(twin)
+
+
+def test_run_waves_match_sequential_run_fact(engine):
+    """Building a refresh's tables side by side changes no output: FULL
+    then INCREMENTAL through run() equals a twin that calls run_fact once
+    per fact, in declaration order."""
+    engine.run(PopulationMode.FULL, T_ORDERS_MID)
+    engine.run(PopulationMode.INCREMENTAL, T_FAR)
+
+    twin = Engine(engine.spark, ORDERS_ENV, engine.storage + "_twin")
+    twin.sources = dict(engine.sources)
+    for mode, upper in ((PopulationMode.FULL, T_ORDERS_MID),
+                        (PopulationMode.INCREMENTAL, T_FAR)):
+        for fact in ORDERS_ENV.facts:
+            if fact.persistent:
+                twin.run_fact(fact, mode, upper)
+    assert _dim_rows(engine) == _dim_rows(twin)
+    assert _fact_rows(engine) == _fact_rows(twin)
+
+
 def test_incremental_resumes_from_stored_watermark(engine):
     engine.run(PopulationMode.FULL, T_ORDERS_MID)
     n1 = engine.read_table("fact_orders_by_day").count()
